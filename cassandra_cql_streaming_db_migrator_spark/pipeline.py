@@ -9,8 +9,8 @@ into one declarative DataFrame lineage per table:
     read -> where_clause filter -> [observe rows_read]
          -> filter chain -> computed columns -> TTL arithmetic
          -> anti-join (if-not-exists) / counter merge -> column mapping
-         -> validity split (continueOnRowError quarantine)
-         -> read/write limit -> [observe rows_passed] -> sink
+         -> [observe rows_failed] -> validity split (continueOnRowError
+            quarantine) -> read/write limit -> [observe rows_passed] -> sink
 
 Catalyst's analyze/optimize replaces ``initialize()``; Tungsten execution
 replaces the row loop; input-split partitioning replaces paging; task
@@ -19,9 +19,11 @@ the job before any table runs (plan-all-then-run, mirroring
 DbMigrator.java:72-74's init-failure abort).
 
 Stats are ``observe()`` metrics riding the sink action — ONE pass computes
-rows_read / rows_passed / rows_migrated (the reference's counters,
-MTT:89-92) with no extra count() scans; at 100 TB an extra count is an
-extra full-table read.
+rows_read / rows_passed / rows_failed / rows_migrated (the reference's
+counters, MTT:89-92) with no extra count() scans; at 100 TB an extra count
+is an extra full-table read.  The one exception is fail-fast
+(``continue_on_row_error=False``), which counts invalid rows before the
+write because it must abort before anything is written.
 
 Error policy (T5, MTT:496-517): Spark cannot drop individual failed writes
 mid-task, so per-row tolerance becomes a *pre-write validity split*: rows
@@ -77,15 +79,20 @@ class TablePlan:
     passed_obs: Observation
     warnings: list[str]
     # recount fallbacks: an Observation breaks when its observed node runs
-    # in MORE than one action (the quarantine count + the sink are two),
-    # which Spark tolerates for file sources but asserts on for local
+    # in MORE than one action (fail-fast's pre-write count + the sink are
+    # two), which Spark tolerates for file sources but asserts on for local
     # relations.  The fallback recounts — an extra scan on a rare path
     # beats losing the stats contract.
     read_df: DataFrame | None = None
     passed_df: DataFrame | None = None
+    # rows_failed rides the sink action when invalid rows are quarantined
+    # (continue_on_row_error); None when fail-fast counts them up front
+    failed_obs: Observation | None = None
 
 
-def _default_validity(spec: TableMigration) -> F.Column | None:
+def default_validity(spec: TableMigration) -> F.Column | None:
+    """T5 default row validity: every PK column non-NULL (None without
+    keys).  Shared by the batch pipeline and streamed migrations."""
     if not spec.key_columns:
         return None
     cond = F.lit(True)
@@ -159,8 +166,15 @@ def _build(
         df = df.select(*cols, *extra)  # P1/P2
 
     quarantine: DataFrame | None = None
-    validity = _default_validity(spec)
+    failed_obs: Observation | None = None
+    validity = default_validity(spec)
     if validity is not None and not spec.counter_columns:
+        if observed and spec.continue_on_row_error:
+            failed_obs = Observation(f"failed_{spec.table_name}")
+            df = df.observe(
+                failed_obs,
+                F.coalesce(F.sum(F.when(validity, 0).otherwise(1)), F.lit(0)).alias("rows"),
+            )
         df, quarantine = quarantine_split(df, validity)  # T5
 
     if spec.max_write_row_count and spec.max_write_row_count > 0:
@@ -172,18 +186,21 @@ def _build(
         df = df.observe(passed_obs, F.count(F.lit(1)).alias("rows"))
 
     return TablePlan(
-        spec, df, quarantine, read_obs, passed_obs, warnings, read_df, passed_df
+        spec, df, quarantine, read_obs, passed_obs, warnings, read_df, passed_df, failed_obs
     )
 
 
 def _run_one(plan: TablePlan, sink) -> TableRunResult:
+    """Run one planned table: one Spark action (the sink's write, or the
+    dry run's count) that also fills every observation.  Fail-fast tables
+    with a validity split run one count of the invalid rows before it."""
     spec = plan.spec
     simulated = spec.simulate_only or sink is None
 
     rows_failed = 0
-    if plan.quarantine is not None:
+    if plan.quarantine is not None and not spec.continue_on_row_error:
         rows_failed = plan.quarantine.count()
-        if rows_failed and spec.continue_on_row_error is False:
+        if rows_failed:
             # T5 fail-fast: abort this table before writing anything
             raise RuntimeError(
                 f"table {spec.table_name}: {rows_failed} rows fail validity "
@@ -208,6 +225,8 @@ def _run_one(plan: TablePlan, sink) -> TableRunResult:
 
     rows_read = _obs_rows(plan.read_obs, plan.read_df, migrated)
     passed = _obs_rows(plan.passed_obs, plan.passed_df, migrated)
+    if plan.failed_obs is not None:
+        rows_failed = _obs_rows(plan.failed_obs, plan.quarantine, 0)
     return TableRunResult(
         table=spec.table_name,
         target=spec.target,

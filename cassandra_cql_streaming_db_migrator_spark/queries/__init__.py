@@ -87,27 +87,27 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     "join_enrich": {"r01": "fail", "r02": "green", "r06": "green", "r07": "green"},
     "join_large": {"r01": "fail", "r02": "green", "r08": "green"},
     "window_running": {"r01": "fail", "r02": "green", "r06": "green"},
-    "agg_rollup": {"r01": "fail", "r02": "green", "r06": "green", "r12": "green"},
+    "agg_rollup": {"r01": "fail", "r02": "green", "r06": "green", "r12": "green", "r13": "green"},
     "agg_cube": {"r01": "fail", "r02": "green", "r08": "green"},
     "agg_grouping_sets": {"r01": "fail", "r02": "green", "r07": "green", "r08": "green"},
     "time_bucket_rollup": {"r01": "fail", "r02": "green", "r08": "green"},
     "agg_pivot": {"r01": "fail", "r02": "green", "r08": "green"},
     "json_extract": {"r01": "fail", "r02": "green", "r08": "green"},
-    "join_asof": {"r01": "green", "r02": "green", "r06": "green", "r12": "green"},
+    "join_asof": {"r01": "green", "r02": "green", "r06": "green", "r12": "green", "r13": "green"},
     "join_range": {"r01": "fail", "r02": "green", "r08": "green"},
-    "set_except": {"r01": "green", "r02": "green", "r06": "green", "r12": "green"},
+    "set_except": {"r01": "green", "r02": "green", "r06": "green", "r12": "green", "r13": "green"},
     "dedup_exact": {"r01": "green", "r02": "green", "r06": "green", "r07": "green"},
     "minhash_pairs": {"r01": "green", "r02": "green", "r08": "green"},
     "fuzzy_dedup": {"r01": "green", "r02": "green", "r06": "green", "r07": "green"},
-    "llm_prep_pipeline": {"r01": "green", "r02": "green", "r08": "green", "r12": "green"},
+    "llm_prep_pipeline": {"r01": "green", "r02": "green", "r08": "green", "r12": "green", "r13": "green"},
     "lang_id": {"r01": "green", "r02": "green", "r06": "green", "r07": "green"},
-    "multimodal_features": {"r01": "green", "r02": "green", "r06": "green", "r12": "green"},
+    "multimodal_features": {"r01": "green", "r02": "green", "r06": "green", "r12": "green", "r13": "green"},
     "embedding_ann_lsh": {"r02": "green", "r08": "green"},
     "embedding_near_dup": {"r02": "green", "r07": "green"},
     "embedding_label_top_pairs": {"r02": "green", "r08": "green"},
     "multimodal_meta": {"r02": "green", "r08": "green"},
     "stream_stream_join": {"r02": "green", "r08": "green"},
-    "stream_tumbling_agg": {"r02": "green", "r06": "green", "r12": "green"},
+    "stream_tumbling_agg": {"r02": "green", "r06": "green", "r12": "green", "r13": "green"},
     "stream_dedup": {"r02": "green", "r08": "green"},
     "stream_session_window": {"r02": "green", "r08": "green"},
     "stream_sliding_agg": {"r02": "green", "r08": "green"},
@@ -115,7 +115,7 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     "decontaminate": {"r02": "green", "r06": "green", "r07": "green"},
     "split_sample": {"r02": "green", "r08": "green"},
     "text_governance": {"r02": "green", "r08": "green"},
-    "sequence_pack": {"r02": "fail", "r03": "green", "r06": "green", "r12": "green"},  # HUGEINT cast fixed
+    "sequence_pack": {"r02": "fail", "r03": "green", "r06": "green", "r12": "green", "r13": "green"},  # HUGEINT cast fixed
     "stratified_sample": {"r02": "green", "r08": "green"},
     "split_leakage": {"r02": "green", "r08": "green"},
     "kmv_distinct": {"r02": "green", "r03": "green", "r08": "green"},
@@ -129,7 +129,7 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     "window_lag_lead": {"r01": "green", "r08": "green"},
     "window_analytics": {"r01": "green", "r08": "green"},
     "distinct_agg": {"r01": "green", "r08": "green"},
-    "agg_percentiles": {"r01": "green", "r06": "green", "r12": "green"},
+    "agg_percentiles": {"r01": "green", "r06": "green", "r12": "green", "r13": "green"},
     "lang_stats": {"r01": "green", "r08": "green"},
     "token_frequency": {"r01": "green", "r08": "green"},
     "multimodal_resize": {"r03": "green", "r08": "green"},
@@ -148,10 +148,10 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     "dedup_components": {"r03": "green", "r09": "green"},
     "simhash_fingerprint": {"r01": "green", "r09": "green"},
     "doc_fingerprint": {"r01": "green", "r09": "green"},
-    "embedding_topk": {"r01": "green", "r06": "green", "r12": "green"},
+    "embedding_topk": {"r01": "green", "r06": "green", "r12": "green", "r13": "green"},
     "token_count_bpe": {"r01": "green", "r09": "green"},
     "window_topk": {"r01": "green", "r09": "green"},
-    "embedding_ann_ivf": {"r01": "green", "r06": "green", "r12": "green"},
+    "embedding_ann_ivf": {"r01": "green", "r06": "green", "r12": "green", "r13": "green"},
     "sessionize_events": {"r03": "green", "r09": "green"},
     "funnel_events": {"r03": "green", "r09": "green"},
     "retention_cohorts": {"r03": "green", "r09": "green"},
@@ -184,7 +184,7 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     "table_profile": {"r03": "green", "r09": "green"},
     "cooccurrence_pairs": {"r03": "green", "r09": "green"},
     "ann_recall": {"r03": "green", "r09": "green"},
-    "join_salted": {"r03": "green", "r06": "green", "r12": "green"},
+    "join_salted": {"r03": "green", "r06": "green", "r12": "green", "r13": "green"},
     "head_coverage": {"r03": "green", "r09": "green"},
     "cdc_latest": {"r03": "green", "r09": "green"},
     "stream_cdc_latest": {"r03": "green", "r10": "green"},
@@ -210,10 +210,10 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     "image_phash": {"r04": "green", "r11": "green"},
     "stream_topk": {"r04": "green", "r11": "green"},
     "session_concurrency": {"r04": "green", "r11": "green"},
-    "jaccard_pairs": {"r04": "green", "r06": "green", "r12": "green"},
+    "jaccard_pairs": {"r04": "green", "r06": "green", "r12": "green", "r13": "green"},
     "sliding_distinct": {"r04": "green", "r11": "green"},
     "null_semantics": {"r04": "green", "r11": "green"},
-    "bpe_merges": {"r04": "green", "r06": "green", "r12": "green"},
+    "bpe_merges": {"r04": "green", "r06": "green", "r12": "green", "r13": "green"},
     "pq_codes": {"r04": "green", "r09": "green"},
     "pq_ann": {"r04": "green", "r09": "green"},
     "skyline_parts": {"r04": "green", "r11": "green"},
@@ -241,70 +241,70 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     # new in round 4 (rule 1: 2 head slots, the rest queue in the backlog)
     "q2_min_cost_supplier": {"r04": "green", "r11": "green"},
     "q6_forecast_revenue": {"r04": "green", "r11": "green"},
-    "q8_market_share": {"r05": "green", "r12": "green"},
+    "q8_market_share": {"r05": "green", "r12": "green", "r13": "green"},
     "q9_product_profit": {"r05": "green", "r07": "green"},
-    "q11_important_stock": {"r05": "green", "r12": "green"},
-    "q12_shipmode_priority": {"r05": "green", "r12": "green"},
-    "q16_parts_supplier": {"r05": "green", "r12": "green"},
-    "q17_small_quantity_revenue": {"r05": "green", "r12": "green"},
-    "q20_potential_promotion": {"r05": "green", "r12": "green"},
-    "q21_waiting_supplier": {"r05": "green", "r12": "green"},
-    "dup_spans": {"r05": "green", "r06": "green", "r12": "green"},
-    "stream_zscore": {"r05": "green", "r12": "green"},
-    "lexical_search": {"r05": "green", "r12": "green"},
+    "q11_important_stock": {"r05": "green", "r12": "green", "r13": "green"},
+    "q12_shipmode_priority": {"r05": "green", "r12": "green", "r13": "green"},
+    "q16_parts_supplier": {"r05": "green", "r12": "green", "r13": "green"},
+    "q17_small_quantity_revenue": {"r05": "green", "r12": "green", "r13": "green"},
+    "q20_potential_promotion": {"r05": "green", "r12": "green", "r13": "green"},
+    "q21_waiting_supplier": {"r05": "green", "r12": "green", "r13": "green"},
+    "dup_spans": {"r05": "green", "r06": "green", "r12": "green", "r13": "green"},
+    "stream_zscore": {"r05": "green", "r12": "green", "r13": "green"},
+    "lexical_search": {"r05": "green", "r12": "green", "r13": "green"},
     "ivf_pq": {"r05": "green", "r06": "green", "r07": "green"},
-    "link_prediction": {"r05": "green", "r12": "green"},
+    "link_prediction": {"r05": "green", "r12": "green", "r13": "green"},
     "image_dedup": {"r05": "green", "r11": "green"},
-    "user_ltv": {"r05": "green", "r12": "green"},
+    "user_ltv": {"r05": "green", "r12": "green", "r13": "green"},
     "event_paths": {"r05": "green", "r11": "green"},
     "incremental_dedup": {"r05": "green", "r11": "green"},
-    "vocab_growth": {"r05": "green", "r12": "green"},
-    "rfm_segments": {"r05": "green", "r12": "green"},
+    "vocab_growth": {"r05": "green", "r12": "green", "r13": "green"},
+    "rfm_segments": {"r05": "green", "r12": "green", "r13": "green"},
     "basket_rules": {"r05": "green", "r11": "green"},
     "embedding_pca": {"r05": "green", "r11": "green"},
     # new in round 5 (head-listed by rule 1)
-    "link_prediction_capped": {"r05": "green", "r12": "green"},
+    "link_prediction_capped": {"r05": "green", "r12": "green", "r13": "green"},
     "audience_overlap": {"r05": "green", "r11": "green"},
     "hll_distinct": {"r05": "green", "r11": "green"},
-    "funnel_attribution": {"r05": "green", "r06": "green", "r12": "green"},
+    "funnel_attribution": {"r05": "green", "r06": "green", "r12": "green", "r13": "green"},
     "activity_streaks": {"r05": "green", "r11": "green"},
-    "seasonal_profile": {"r05": "green", "r12": "green"},
-    "migration_checksum": {"r05": "green", "r12": "green"},
+    "seasonal_profile": {"r05": "green", "r12": "green", "r13": "green"},
+    "migration_checksum": {"r05": "green", "r12": "green", "r13": "green"},
     "exact_median": {"r05": "green", "r11": "green"},
     "ivf_pq_recall": {"r05": "green", "r11": "green"},
-    "stream_enrich": {"r05": "green", "r12": "green"},
+    "stream_enrich": {"r05": "green", "r12": "green", "r13": "green"},
     "unpivot_metrics": {"r05": "green", "r07": "green"},
-    "revenue_deciles": {"r05": "green", "r12": "green"},
-    "multimodal_tiles": {"r05": "green", "r12": "green"},
-    "stream_attribution": {"r05": "green", "r06": "green", "r12": "green"},
-    "knn_graph": {"r05": "green", "r06": "green", "r12": "green"},
+    "revenue_deciles": {"r05": "green", "r12": "green", "r13": "green"},
+    "multimodal_tiles": {"r05": "green", "r12": "green", "r13": "green"},
+    "stream_attribution": {"r05": "green", "r06": "green", "r12": "green", "r13": "green"},
+    "knn_graph": {"r05": "green", "r06": "green", "r12": "green", "r13": "green"},
     "ema_prices": {"r05": "green", "r11": "green"},
     "percent_rank_report": {"r05": "green", "r07": "green"},
     "dedup_recall": {"r05": "green", "r11": "green"},
-    "quality_curriculum": {"r05": "green", "r12": "green"},
-    "langid_confusion": {"r05": "green", "r12": "green"},
-    "join_skew_stats": {"r05": "green", "r12": "green"},
-    "zorder_scan": {"r05": "green", "r12": "green"},
+    "quality_curriculum": {"r05": "green", "r12": "green", "r13": "green"},
+    "langid_confusion": {"r05": "green", "r12": "green", "r13": "green"},
+    "join_skew_stats": {"r05": "green", "r12": "green", "r13": "green"},
+    "zorder_scan": {"r05": "green", "r12": "green", "r13": "green"},
     "dedup_components_star": {"r05": "green", "r06": "green", "r07": "green"},
-    "stream_checksum": {"r05": "green", "r12": "green"},
+    "stream_checksum": {"r05": "green", "r12": "green", "r13": "green"},
     "exact_quantiles": {"r05": "green", "r11": "green"},
     "id_gap_report": {"r05": "green", "r11": "green"},
-    "hll_by_type": {"r05": "green", "r06": "green", "r12": "green"},
+    "hll_by_type": {"r05": "green", "r06": "green", "r12": "green", "r13": "green"},
     "join_asof_tolerance": {"r05": "green", "r07": "green"},
     "window_frames": {"r05": "green", "r07": "green"},
     # new in round 5, late session (head full -> DRIVER_BACKLOG, rule 1)
-    "stream_hll": {"r06": "green", "r12": "green"},
-    "source_dup_report": {"r06": "green", "r12": "green"},
+    "stream_hll": {"r06": "green", "r12": "green", "r13": "green"},
+    "source_dup_report": {"r06": "green", "r12": "green", "r13": "green"},
     # new in round 6 (head-listed by rule 1)
     "dup_span_removal": {"r06": "green", "r07": "green", "r08": "green"},
     "bpe_encode": {"r06": "green", "r07": "green"},
     "graph_ann_search": {"r06": "green", "r07": "green"},
-    "graph_ann_recall": {"r06": "green", "r12": "green"},
+    "graph_ann_recall": {"r06": "green", "r12": "green", "r13": "green"},
     "stream_incremental_dedup": {"r06": "green", "r07": "green"},
     "mmr_rerank": {"r06": "green", "r07": "green"},
     "tokenizer_fertility": {"r06": "green"},
     "lm_quality_filter": {"r06": "green", "r07": "green"},
-    "bucketed_join": {"r06": "green", "r12": "green"},
+    "bucketed_join": {"r06": "green", "r12": "green", "r13": "green"},
     # new in round 6, late session (head full -> DRIVER_BACKLOG, rule 1)
     "hist_quantiles": {"r07": "green"},
     "stream_hist_quantiles": {"r07": "green"},
@@ -357,7 +357,7 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     "stream_distortion_monitor": {"r10": "green"},
     "ivf_pq_probe_curve": {"r10": "green"},
     "semdedup_threshold_curve": {"r10": "green"},
-    "curation_funnel": {"r10": "green", "r12": "green"},
+    "curation_funnel": {"r10": "green", "r12": "green", "r13": "green"},
     "contrastive_triplets": {"r10": "green"},
     "dim_truncation_recall": {"r10": "green"},
     "retrieval_eval": {"r10": "green"},
@@ -377,9 +377,9 @@ DRIVER_HISTORY: dict[str, dict[str, str]] = {
     "pii_redact": {"r11": "green"},
     "shard_manifest": {"r11": "green"},
     # new in round 12 (head-listed by rule 1)
-    "maintenance_planner": {"r12": "green"},
-    "maintenance_applied": {"r12": "green"},
-    "stream_pii_redact": {"r12": "green"},
+    "maintenance_planner": {"r12": "green", "r13": "green"},
+    "maintenance_applied": {"r12": "green", "r13": "green"},
+    "stream_pii_redact": {"r12": "green", "r13": "green"},
 }
 
 DRIVER_HEAD_CAP = 50

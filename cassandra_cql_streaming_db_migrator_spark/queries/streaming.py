@@ -1108,23 +1108,24 @@ def stream_margin_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the reference-matrix collect and the arrival-chunk scratch write
     # are independent legs — overlap them (guide §2.6)
-    _pool = ThreadPoolExecutor(max_workers=1)
-    _arr_fut = _pool.submit(
-        read_documents_stream_chunked, spark, emb.where(~base_where), 4
-    )
-    # metadata-scale: labels x R reference rows by construction
-    ref_rows = (
-        emb.where(base_where)
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                _W.partitionBy("label").orderBy(F.col("vec_id").asc())
-            ),
+    with ThreadPoolExecutor(max_workers=1) as _pool:
+        _arr_fut = _pool.submit(
+            read_documents_stream_chunked, spark, emb.where(~base_where), 4
         )
-        .where(F.col("__rn") <= _MARGIN_REF_PER_LABEL)
-        .select("label", "embedding")
-        .collect()
-    )
+        # metadata-scale: labels x R reference rows by construction
+        ref_rows = (
+            emb.where(base_where)
+            .withColumn(
+                "__rn",
+                F.row_number().over(
+                    _W.partitionBy("label").orderBy(F.col("vec_id").asc())
+                ),
+            )
+            .where(F.col("__rn") <= _MARGIN_REF_PER_LABEL)
+            .select("label", "embedding")
+            .collect()
+        )
+        arrivals = _arr_fut.result()
     rlabels = np.array([r[0] for r in ref_rows])
     rmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in ref_rows])
     # reference norms via the same sequential fold as the kernel below
@@ -1171,8 +1172,6 @@ def stream_margin_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                  "margin_ppm": pd.array(out_m, dtype="int64")}
             )
 
-    arrivals = _arr_fut.result()
-    _pool.shutdown()
     from pyspark.sql.types import LongType, StructField, StructType
 
     # output label field type derived from the input schema, not assumed

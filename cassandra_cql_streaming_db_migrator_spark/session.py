@@ -74,6 +74,10 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # the events fixture's TIMESTAMP(NANOS) column reads as long
+        # (sources.parquet.load_table truncates it to micros); set once
+        # here rather than by every read, which may run on pool threads
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Pin the Python worker pool: reuse=true is the Spark default but is
         # load-bearing here (bench/driver sweeps interleave JVM-only and

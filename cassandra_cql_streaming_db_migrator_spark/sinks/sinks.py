@@ -20,11 +20,14 @@ the final execute, DMP:393-401 — the DEFAULT, TableMigrationDefinition.java:
 from __future__ import annotations
 
 import os
+import uuid
 
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.parquet import local_path, read_parquet
 
 
 def detect_partition_column(target_path: str) -> str | None:
@@ -60,17 +63,11 @@ def _read_target_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     OSError propagates.  Spark emits both 'file://x' and single-slash
     'file:/x' forms — both are stripped.  The exception path below remains
     for URI targets (s3://, hdfs://...), where only the reader can answer
-    existence."""
+    existence.  The read reuses the target's remembered schema while its
+    files are unchanged (``sources.parquet.read_parquet``)."""
     from pyspark.errors import AnalysisException
 
-    if "://" not in path and not path.startswith("file:"):
-        local = path
-    elif path.startswith("file://"):
-        local = path[len("file://"):]
-    elif path.startswith("file:"):
-        local = path[len("file:"):]
-    else:
-        local = None
+    local = local_path(path)
     if local is not None:
         try:
             os.stat(local)
@@ -80,7 +77,7 @@ def _read_target_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
         # classified as absent, never handed to a reader that might
         # misreport it as PATH_NOT_FOUND.
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         df.schema  # force analysis so a missing path surfaces here
         return df
     except AnalysisException as e:
@@ -114,6 +111,38 @@ def write_parquet(df: DataFrame, path: str, mode: str = "append") -> None:
     df.write.mode(mode).parquet(path)
 
 
+def _write_then_swap(merged: DataFrame, target_path: str) -> None:
+    """Replace the parquet directory ``target_path`` with ``merged``, a
+    frame that reads it.  ``merged`` is written once to a fresh sibling
+    ``<target>.__tmp-<uuid>``; two Hadoop ``FileSystem`` renames (target ->
+    ``.__old-<uuid>``, tmp -> target) swap it in, and the old directory is
+    deleted.  A failed write leaves the target untouched and removes the
+    sibling.  A crash between the two renames leaves no target, with both
+    copies beside it under their suffixes; closing that gap needs a table
+    format's atomic commit (Delta/Iceberg)."""
+    spark = merged.sparkSession
+    jvm = spark.sparkContext._jvm
+    base = target_path.rstrip("/")
+    tag = uuid.uuid4().hex
+    target = jvm.org.apache.hadoop.fs.Path(base)
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{base}.__tmp-{tag}")
+    old = jvm.org.apache.hadoop.fs.Path(f"{base}.__old-{tag}")
+    fs = target.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    try:
+        merged.write.parquet(tmp.toString())
+    except BaseException:
+        fs.delete(tmp, True)
+        raise
+    if not fs.rename(target, old):
+        fs.delete(tmp, True)
+        raise OSError(f"could not move {base} aside for the merge swap")
+    if not fs.rename(tmp, target):
+        fs.rename(old, target)
+        fs.delete(tmp, True)
+        raise OSError(f"could not move the merged {base} into place")
+    fs.delete(old, True)
+
+
 def upsert_parquet(batch: DataFrame, target_path: str, key_columns: list[str]) -> None:
     """K1 upsert for the parquet fixture sink: new rows win over existing on
     PK (Cassandra UPDATE-upsert semantics).
@@ -123,7 +152,8 @@ def upsert_parquet(batch: DataFrame, target_path: str, key_columns: list[str]) -
     path (``upsert_parquet_partitioned``): merge cost proportional to the
     touched partitions, untouched partition files never read or rewritten —
     the only acceptable default at 100 TB.  The whole-table rewrite below is
-    reserved for unpartitioned fixture targets.
+    reserved for unpartitioned fixture targets; it writes the merge once
+    beside the target and swaps it in (``_write_then_swap``).
 
     Scale note: for a real lakehouse target this is MERGE INTO on
     Delta/Iceberg (copy-on-write handled by the table format); the connector
@@ -141,10 +171,7 @@ def upsert_parquet(batch: DataFrame, target_path: str, key_columns: list[str]) -
         batch.write.mode("overwrite").parquet(target_path)
         return
     survivors = existing.join(batch.select(*key_columns), on=key_columns, how="left_anti")
-    merged = survivors.unionByName(batch, allowMissingColumns=False)
-    # write to temp then swap would be the production shape; local: cache
-    merged = merged.localCheckpoint()  # cut lineage before overwriting input
-    merged.write.mode("overwrite").parquet(target_path)
+    _write_then_swap(survivors.unionByName(batch, allowMissingColumns=False), target_path)
 
 
 def _epoch_marker_path(target_path: str) -> str:
@@ -183,9 +210,10 @@ def counter_merge_parquet(
     idempotent — a foreachBatch replay after a crash between sink and
     checkpoint commit would double-count.  Pass the foreachBatch
     ``epoch_id`` and the sink records the last applied epoch in a marker
-    file next to the target (written atomically AFTER the data commit) and
-    skips any epoch <= the marker.  A crash in the sliver between data
-    write and marker write still replays once (at-least-once there);
+    file next to the target (written atomically AFTER the data commit, the
+    swap of ``_write_then_swap``) and skips any epoch <= the marker.  A
+    crash in the sliver between data swap and marker write still replays
+    once (at-least-once there);
     closing that window entirely needs an atomic data+epoch commit, i.e. a
     transactional table format (Delta/Iceberg txn log) — documented, not
     faked, here."""
@@ -213,8 +241,7 @@ def counter_merge_parquet(
                 F.coalesce(F.col(c), F.lit(0))
                 + F.coalesce(F.col(f"__delta_{c}"), F.lit(0)),
             ).drop(f"__delta_{c}")
-        merged = merged.localCheckpoint()  # cut lineage before overwriting input
-        merged.write.mode("overwrite").parquet(target_path)
+        _write_then_swap(merged, target_path)
     if epoch_id is not None:
         marker = _epoch_marker_path(target_path)
         tmp = f"{marker}.tmp"

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .parquet import load_table, table_path
+from .parquet import load_table, read_parquet, table_path
 
 _CORRUPT_COL = "_corrupt_record"
 
@@ -116,7 +116,7 @@ def read_csv(
 def schema_for_table(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
     """The fixture table's schema (from the parquet footer — metadata-only
     read), for ingesting the same table from JSONL/CSV drops."""
-    return spark.read.parquet(table_path(sf_dir, name)).schema
+    return read_parquet(spark, table_path(sf_dir, name)).schema
 
 
 def read_jsonl_stream(

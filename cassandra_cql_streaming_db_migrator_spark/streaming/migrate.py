@@ -19,7 +19,8 @@ The reference's whole executor — paged reads (T1), inter-page throttling
 
 The same table-migration spec (plans.spec.TableMigration) drives the
 transform, so batch and streaming migrations share one definition — the
-filter chain, computed columns and TTL arithmetic are identical code.
+filter chain, computed columns, TTL arithmetic and the NULL-key validity
+split are identical code.
 """
 
 from __future__ import annotations
@@ -27,19 +28,28 @@ from __future__ import annotations
 import tempfile
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.compute import with_computed_columns
 from ..operators.filters import apply_filter_chain, pushdown_filter
 from ..operators.ttl import ttl_preserving_columns
+from ..pipeline import default_validity
 from ..plans.spec import TableMigration
-from ..sinks.sinks import counter_merge_parquet, upsert_parquet
+from ..sinks.sinks import counter_merge_parquet, quarantine_split, upsert_parquet
 
 
 def apply_migration_transform(stream: DataFrame, spec: TableMigration) -> DataFrame:
     """The spec's row pipeline on a streaming DataFrame (filters, computed
-    columns, TTL) — anti-join/counter stages are batch-side concerns handled
-    inside the sink's foreachBatch where both sides are bounded."""
+    columns, TTL, validity) — anti-join/counter stages are batch-side
+    concerns handled inside the sink's foreachBatch where both sides are
+    bounded.
+
+    Rows failing the batch pipeline's validity (a NULL key) never reach
+    the sink: with ``continue_on_row_error`` they are quarantined, as in
+    batch; without it the microbatch fails inside its write, so the
+    target keeps its previous contents (the merge is swapped in only
+    after a whole write)."""
     df = stream
     if spec.where_clause:
         df = pushdown_filter(df, spec.where_clause)
@@ -47,6 +57,17 @@ def apply_migration_transform(stream: DataFrame, spec: TableMigration) -> DataFr
     df = with_computed_columns(df, spec.calculated_columns)
     if spec.respect_ttl and spec.source_default_ttl and spec.target_default_ttl:
         df = ttl_preserving_columns(df, spec.source_default_ttl, spec.target_default_ttl)
+    validity = default_validity(spec)
+    if validity is not None and not spec.counter_columns:
+        if spec.continue_on_row_error:
+            df, _quarantine = quarantine_split(df, validity)  # T5
+        else:
+            df = df.filter(
+                F.when(validity, True).otherwise(
+                    F.raise_error(F.lit(f"table {spec.table_name}: a row fails validity "
+                                        "and continue_on_row_error=false"))
+                )
+            )
     return df
 
 

@@ -33,6 +33,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.parquet import ensure_nanos_as_long, read_parquet
+
 
 def _as_stream_dir(path: str) -> str:
     """FileStreamSource wants a directory; the fixture is a single parquet
@@ -53,9 +55,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarks require it (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).  The
     session timezone is pinned to UTC (session.py), so the NTZ->LTZ cast
     preserves wall-clock values exactly."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_nanos_as_long(spark)
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     stream = spark.readStream.schema(schema).parquet(_as_stream_dir(path))
     for name, dtype in stream.dtypes:
         if name == "ts" and dtype == "bigint":
@@ -663,7 +665,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents fixture as a bounded file stream (the live-corpus
     ingestion shape: new document drops arriving per microbatch)."""
     path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     return spark.readStream.schema(schema).parquet(_as_stream_dir(path))
 
 
@@ -1715,6 +1717,7 @@ def streaming_index_cdc(
         # and the two applies are independent writes to different paths —
         # run them overlapped (guide §2.6); the watermark still commits
         # only after BOTH are on disk, preserving the replay contract.
+        # metadata-scale: at most one row per op code ("u"/"d").
         ops = {
             r[0]: r[1]
             for r in mb_df.groupBy(op_col).count().collect()

@@ -152,3 +152,74 @@ def test_multibatch_stream_upsert_last_batch_wins(spark, tmp_path):
     migrate_stream_to_parquet(stream, spec, target, checkpoint_dir=str(tmp_path / "ck"))
     got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
     assert got == {1: "one_v1", 2: "two_v2", 3: "three_v1"}
+
+
+def _null_key_stream(spark, tmp_path, batches):
+    """A file stream over ``batches`` (one parquet file each, one file
+    per microbatch, in order) of ``k long, v string`` rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, rows in enumerate(batches):
+        p = str(src / f"b{i}.parquet")
+        ks, vs = zip(*rows)
+        pq.write_table(
+            pa.table({"k": pa.array(ks, pa.int64()), "v": pa.array(vs, pa.string())}), p
+        )
+        os.utime(p, (1_000_000_000 + 10 * i,) * 2)
+    return (
+        spark.readStream.schema("k long, v string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+
+
+def test_stream_quarantines_null_key_rows(spark, tmp_path):
+    """A NULL-key row never reaches a streamed target, on the first write
+    or on a merge: streams apply the batch pipeline's validity split."""
+    from cassandra_cql_streaming_db_migrator_spark.plans.spec import TableMigration
+    from cassandra_cql_streaming_db_migrator_spark.streaming.migrate import (
+        migrate_stream_to_parquet,
+    )
+
+    stream = _null_key_stream(
+        spark, tmp_path, [[(1, "a"), (None, "bad1")], [(None, "bad2"), (2, "b")]]
+    )
+    spec = TableMigration(
+        table_name="t", key_columns=["k"], simulate_only=False,
+        continue_on_row_error=True,
+    )
+    target = str(tmp_path / "target")
+    migrate_stream_to_parquet(stream, spec, target, checkpoint_dir=str(tmp_path / "ck"))
+    got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
+    assert got == {1: "a", 2: "b"}
+
+
+def test_stream_failfast_null_key_keeps_target(spark, tmp_path):
+    """Without continue_on_row_error a NULL-key row fails its microbatch
+    inside the merge write: the target keeps the earlier batch's rows and
+    no swap sibling is left behind."""
+    import glob
+
+    import pytest
+
+    from cassandra_cql_streaming_db_migrator_spark.plans.spec import TableMigration
+    from cassandra_cql_streaming_db_migrator_spark.streaming.migrate import (
+        migrate_stream_to_parquet,
+    )
+
+    stream = _null_key_stream(spark, tmp_path, [[(1, "a")], [(2, "b"), (None, "bad")]])
+    spec = TableMigration(
+        table_name="t", key_columns=["k"], simulate_only=False,
+        continue_on_row_error=False,
+    )
+    target = str(tmp_path / "target")
+    with pytest.raises(Exception, match="fails validity"):
+        migrate_stream_to_parquet(stream, spec, target, checkpoint_dir=str(tmp_path / "ck"))
+    got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
+    assert got == {1: "a"}
+    assert glob.glob(target + ".__*") == []

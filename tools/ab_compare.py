@@ -81,7 +81,7 @@ def main() -> int:
         conf = conf_a if variant == "A" else conf_b
         for name in args.queries:
             saved = {k: os.environ.get(k) for k in {**env_a, **env_b}}
-            saved_conf = {k: spark.conf.get(k) for k in {**conf_a, **conf_b}}
+            saved_conf = {k: spark.conf.get(k, None) for k in {**conf_a, **conf_b}}
             for k in saved:
                 os.environ.pop(k, None)
             os.environ.update(env)
@@ -100,7 +100,10 @@ def main() -> int:
                     else:
                         os.environ[k] = v
                 for k, v in saved_conf.items():
-                    spark.conf.set(k, v)
+                    if v is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, v)
         t0 = time.perf_counter()
         ctl.write.format("noop").mode("overwrite").save()
         controls.append(time.perf_counter() - t0)
