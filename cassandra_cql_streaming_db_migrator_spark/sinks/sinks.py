@@ -63,8 +63,10 @@ def _read_target_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     OSError propagates.  Spark emits both 'file://x' and single-slash
     'file:/x' forms — both are stripped.  The exception path below remains
     for URI targets (s3://, hdfs://...), where only the reader can answer
-    existence.  The read reuses the target's remembered schema while its
-    files are unchanged (``sources.parquet.read_parquet``)."""
+    existence.  An absent target whose swap was cut between its two
+    renames is restored first (``_restore_swapped_out``).  The read reuses
+    the target's remembered schema while its files are unchanged
+    (``sources.parquet.read_parquet``)."""
     from pyspark.errors import AnalysisException
 
     local = local_path(path)
@@ -72,7 +74,8 @@ def _read_target_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
         try:
             os.stat(local)
         except FileNotFoundError:
-            return None
+            if not _restore_swapped_out(spark, path):
+                return None
         # any other OSError (EACCES, EIO, ...) re-raises here — never
         # classified as absent, never handed to a reader that might
         # misreport it as PATH_NOT_FOUND.
@@ -83,6 +86,8 @@ def _read_target_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            if _restore_swapped_out(spark, path):
+                return read_parquet(spark, path)
             return None
         raise
 
@@ -118,16 +123,15 @@ def _write_then_swap(merged: DataFrame, target_path: str) -> None:
     ``.__old-<uuid>``, tmp -> target) swap it in, and the old directory is
     deleted.  A failed write leaves the target untouched and removes the
     sibling.  A crash between the two renames leaves no target, with both
-    copies beside it under their suffixes; closing that gap needs a table
-    format's atomic commit (Delta/Iceberg)."""
-    spark = merged.sparkSession
-    jvm = spark.sparkContext._jvm
-    base = target_path.rstrip("/")
+    copies beside it under their suffixes; the next merge into the target
+    restores ``.__old-*`` first (``_restore_swapped_out``) and redoes its
+    batch on it.  Closing that gap needs a table format's atomic commit
+    (Delta/Iceberg)."""
+    fs, jvm_path, target = _swap_fs(merged.sparkSession, target_path)
+    base = target.toString()
     tag = uuid.uuid4().hex
-    target = jvm.org.apache.hadoop.fs.Path(base)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{base}.__tmp-{tag}")
-    old = jvm.org.apache.hadoop.fs.Path(f"{base}.__old-{tag}")
-    fs = target.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    tmp = jvm_path(f"{base}.__tmp-{tag}")
+    old = jvm_path(f"{base}.__old-{tag}")
     try:
         merged.write.parquet(tmp.toString())
     except BaseException:
@@ -137,10 +141,46 @@ def _write_then_swap(merged: DataFrame, target_path: str) -> None:
         fs.delete(tmp, True)
         raise OSError(f"could not move {base} aside for the merge swap")
     if not fs.rename(tmp, target):
-        fs.rename(old, target)
+        if not fs.rename(old, target):
+            raise OSError(
+                f"could not move the merged {base} into place, nor the previous "
+                f"table back: it is at {old.toString()}, the merge at {tmp.toString()}"
+            )
         fs.delete(tmp, True)
         raise OSError(f"could not move the merged {base} into place")
     fs.delete(old, True)
+
+
+def _swap_fs(spark: SparkSession, target_path: str):
+    """(Hadoop FileSystem, Path class, target Path) for the merge swap."""
+    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    target = jvm_path(target_path.rstrip("/"))
+    fs = target.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return fs, jvm_path, fs.makeQualified(target)
+
+
+def _restore_swapped_out(spark: SparkSession, target_path: str) -> bool:
+    """Undo a ``_write_then_swap`` cut between its two renames: the target
+    is absent and the previous table sits beside it as ``.__old-<uuid>``.
+    Renames that copy back and returns True; False when there is none.
+    Without this a merge sink would take the first-write branch and
+    overwrite the accumulated table with one batch.  Several ``.__old-*``
+    copies are ambiguous and raise."""
+    fs, jvm_path, target = _swap_fs(spark, target_path)
+    parent = target.getParent()
+    if parent is None or not fs.exists(parent):
+        return False
+    prefix = target.getName() + ".__old-"
+    olds = [st.getPath() for st in fs.listStatus(parent)
+            if st.getPath().getName().startswith(prefix)]
+    if not olds:
+        return False
+    if len(olds) > 1:
+        raise OSError(f"{target_path} is absent and {len(olds)} {prefix}* copies "
+                      "sit beside it; restore the right one by hand")
+    if not fs.rename(olds[0], target):
+        raise OSError(f"could not restore {olds[0].toString()} to {target_path}")
+    return True
 
 
 def upsert_parquet(batch: DataFrame, target_path: str, key_columns: list[str]) -> None:

@@ -90,45 +90,40 @@ def local_path(path: str) -> str | None:
     return None if "://" in path else path
 
 
-def _hidden(name: str) -> bool:
-    """Spark's rule for files a directory listing skips (HadoopFSUtils.
-    shouldFilterOutPathName): ``_``/``.`` prefixes and in-flight copies,
-    except the Parquet summary files schema inference may read."""
-    if name.startswith(("_common_metadata", "_metadata")):
-        return False
-    return (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-
-
 def _file_set(local: str) -> tuple:
-    """(relative path, size, mtime_ns) of every data file under ``local``."""
+    """(relative path, size, mtime_ns) of every file under ``local``.
+    Hidden files (``_SUCCESS``, ``.crc``) are included: they change with
+    the data files, so they cost no reuse and need no copy of Spark's
+    listing rule."""
     st = os.stat(local)
     if not stat.S_ISDIR(st.st_mode):
         return (("", st.st_size, st.st_mtime_ns),)
     out = []
-    for root, dirs, files in os.walk(local):
-        dirs[:] = [d for d in dirs if not _hidden(d)]
+    for root, _dirs, files in os.walk(local):
         for fn in files:
-            if not _hidden(fn):
-                full = os.path.join(root, fn)
-                fst = os.stat(full)
-                out.append((os.path.relpath(full, local), fst.st_size, fst.st_mtime_ns))
+            full = os.path.join(root, fn)
+            fst = os.stat(full)
+            out.append((os.path.relpath(full, local), fst.st_size, fst.st_mtime_ns))
     return tuple(sorted(out))
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` without a schema-inference job per call.
+    """``spark.read.parquet(path)`` without a schema-inference job per
+    repeated read.
 
     Inference runs one Spark job (footer reads) per read; a supplied schema
     runs none.  The inferred schema is remembered per path and supplied
-    again while the path's data files (path, size, mtime_ns) and the
+    again while the path's files (path, size, mtime_ns) and the
     type-mapping confs are unchanged; any change re-infers.  The memo is
     process-wide: the signature alone decides reuse, so sessions with other
     confs never see each other's schemas.  Remote and glob paths always
-    infer."""
+    infer.
+
+    It pays off only where one process reads the same unchanged path again:
+    registry queries run in one session (each query loads its fixture
+    tables), and a merge sink re-reading the target its job just loaded.
+    A job that reads each path once (the CLI) gets no hit and pays one
+    ``stat`` per file of each path it reads."""
     local = local_path(path)
     if local is None or any(c in local for c in "*?[{"):
         return spark.read.parquet(path)

@@ -36,7 +36,7 @@ from ..operators.filters import apply_filter_chain, pushdown_filter
 from ..operators.ttl import ttl_preserving_columns
 from ..pipeline import default_validity
 from ..plans.spec import TableMigration
-from ..sinks.sinks import counter_merge_parquet, quarantine_split, upsert_parquet
+from ..sinks.sinks import counter_merge_parquet, upsert_parquet
 
 
 def apply_migration_transform(stream: DataFrame, spec: TableMigration) -> DataFrame:
@@ -46,10 +46,10 @@ def apply_migration_transform(stream: DataFrame, spec: TableMigration) -> DataFr
     bounded.
 
     Rows failing the batch pipeline's validity (a NULL key) never reach
-    the sink: with ``continue_on_row_error`` they are quarantined, as in
-    batch; without it the microbatch fails inside its write, so the
-    target keeps its previous contents (the merge is swapped in only
-    after a whole write)."""
+    the sink: with ``continue_on_row_error`` they are dropped (a stream
+    keeps no quarantine side output); without it the microbatch fails
+    inside its write, so the target keeps its previous contents (the
+    merge is swapped in only after a whole write)."""
     df = stream
     if spec.where_clause:
         df = pushdown_filter(df, spec.where_clause)
@@ -60,7 +60,7 @@ def apply_migration_transform(stream: DataFrame, spec: TableMigration) -> DataFr
     validity = default_validity(spec)
     if validity is not None and not spec.counter_columns:
         if spec.continue_on_row_error:
-            df, _quarantine = quarantine_split(df, validity)  # T5
+            df = df.filter(validity)  # T5
         else:
             df = df.filter(
                 F.when(validity, True).otherwise(

@@ -142,6 +142,33 @@ class TestWriteThenSwap:
         got = {r.k: r.c for r in spark.read.parquet(target).collect()}
         assert got == {1: 10, 2: 20}
 
+    @pytest.mark.parametrize("sink", ["upsert", "counter"])
+    def test_swap_cut_between_renames_is_restored(self, spark, tmp_path, sink):
+        """A crash after target -> .__old-* and before tmp -> target leaves
+        no target; the next merge must start from the previous table, not
+        take the first-write branch and keep only its own batch."""
+        target = str(tmp_path / f"{sink}.parquet")
+        spark.createDataFrame([(1, 10), (2, 20)], "k long, c long").write.parquet(target)
+        os.rename(target, f"{target}.__old-{uuid.uuid4().hex}")
+        batch = spark.createDataFrame([(2, 5), (3, 7)], "k long, c long")
+        if sink == "upsert":
+            upsert_parquet(batch, target, ["k"])
+            want = {1: 10, 2: 5, 3: 7}
+        else:
+            counter_merge_parquet(batch, target, ["k"], ["c"])
+            want = {1: 10, 2: 25, 3: 7}
+        got = {r.k: r.c for r in spark.read.parquet(target).collect()}
+        assert got == want
+        assert _leftovers(target) == []
+
+    def test_several_swapped_out_copies_refuse(self, spark, tmp_path):
+        target = str(tmp_path / "t.parquet")
+        for _ in range(2):
+            _kv(spark, [(1, "a")]).write.parquet(f"{target}.__old-{uuid.uuid4().hex}")
+        with pytest.raises(OSError, match="restore the right one by hand"):
+            upsert_parquet(_kv(spark, [(2, "b")]), target, ["k"])
+        assert not os.path.exists(target)
+
 
 def _write_source(path, ks, vs):
     pq.write_table(pa.table({"k": pa.array(ks, pa.int64()), "v": pa.array(vs, pa.int64())}), path)
