@@ -41,9 +41,8 @@ def run_query_to_noop(df) -> None:
 # queries ran 4-7x slow (JVM controls at record pace, identical code —
 # judge-verified).  "Measure, don't guess" (the reference instruments its own
 # latencies, MessageTransformerTask histograms): record the host evidence
-# alongside every bench record, and when the probe shows a degraded worker
-# path, fall back to the equality-tested pure-Catalyst twin for the
-# minhash/dedup family so the record tracks plan cost, not host noise.
+# alongside every bench record, so a degraded window shows in the record
+# itself.  The probe observes only; every run measures the same code.
 
 
 def _cgroup_cpu() -> dict:
@@ -174,21 +173,11 @@ def main() -> int:
         )
     )
 
-    # Worker-pool health probe + adaptive engine fallback: if the Arrow
-    # round-trip is degraded both relative to the JVM control and in
-    # absolute terms, run the minhash/dedup family on its pure-Catalyst
-    # twin (equality-tested; values identical) so the committed record
-    # measures plans, not the host window.  Thresholds: healthy idle runs
-    # measure arrow/jvm ~1-3 and arrow < 1 s; the contaminated windows
-    # measured 4-7x whole-query blowups.
+    # Worker-pool health probe, recorded beside the timings: healthy idle
+    # runs measure arrow/jvm ~1-3 and arrow < 1 s; the contaminated
+    # windows measured 4-7x whole-query blowups.
     host_before = _host_sample()
     pool = _probe_worker_pool(spark)
-    engine_forced = os.environ.get("SPARK_GRAFT_DEDUP_ENGINE")
-    if engine_forced is None and (
-        pool["arrow_jvm_ratio"] > 4.0 and pool["arrow_roundtrip_sec"] > 2.0
-    ):
-        os.environ["SPARK_GRAFT_DEDUP_ENGINE"] = "hof"
-    engine_decision = os.environ.get("SPARK_GRAFT_DEDUP_ENGINE", "arrow")
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     timings: dict[str, float] = {}
@@ -261,7 +250,6 @@ def main() -> int:
             "host_before": host_before,
             "host_after": _host_sample(),
             "worker_pool": pool,
-            "dedup_engine": engine_decision,
             "load1_at_query_start": load1,
         },
     }
@@ -283,7 +271,6 @@ def main() -> int:
                 "n_queries": len(timings),
                 "queries": worst,  # worst 5 only; full map in bench_detail.json
                 "max_spread_sec": max(spreads.values()) if spreads else 0.0,
-                "dedup_engine": engine_decision,
                 "arrow_jvm_ratio": pool["arrow_jvm_ratio"],
                 "migrate_rows_per_sec": round(best_rate),
                 "migrate_gate_1e5_rows_per_sec": best_rate >= 1e5,

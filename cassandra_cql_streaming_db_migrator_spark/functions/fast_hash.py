@@ -59,8 +59,9 @@ def shingle_hash_sets(
 
     Returns (doc_idx, hashes) sorted by (doc, hash): the distinct
     ``poly_hash`` values of each doc's character shingles, replicating
-    dedup.shingle_hashes exactly (docs shorter than ``shingle_len``
-    contribute the hash of the whole text — 0 for empty).
+    the Catalyst ``shingle_hashes`` in tests/catalyst_reference.py exactly
+    (docs shorter than ``shingle_len`` contribute the hash of the whole
+    text — 0 for empty).
     """
     n_docs = len(texts)
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n_docs)
@@ -105,8 +106,9 @@ def shingle_hash_sets(
 
 
 def minhash_signatures(texts: list[str], shingle_len: int) -> np.ndarray:
-    """(n_docs, 16) int64 minhash signatures — same integers as
-    dedup.minhash_signature over dedup.shingle_hashes."""
+    """(n_docs, 16) int64 minhash signatures — same integers as the
+    Catalyst ``minhash_signature`` over ``shingle_hashes`` in
+    tests/catalyst_reference.py."""
     n_docs = len(texts)
     doc_idx, hashes = shingle_hash_sets(texts, shingle_len)
     starts = np.searchsorted(doc_idx, np.arange(n_docs, dtype=np.int64))
@@ -127,9 +129,11 @@ def ngram_hash_lists(texts: list[str], n: int) -> list[np.ndarray]:
 
 
 def simhash_values(texts: list[str], token_sep: str = " ") -> np.ndarray:
-    """int64 simhash per doc — same integers as dedup.simhash_column
-    (split on ``token_sep`` keeping empties, poly-fold each token mod
-    2^53-111, majority vote per bit over 53 bits)."""
+    """int64 simhash per doc — same integers as the Catalyst
+    ``simhash_from_hashes`` over ``token_hashes`` in
+    tests/catalyst_reference.py (split on ``token_sep`` keeping empties,
+    poly-fold each token mod 2^53-111, majority vote per bit over 53
+    bits)."""
     n_docs = len(texts)
     token_lists = [t.split(token_sep) for t in texts]
     n_tokens = np.fromiter(

@@ -45,13 +45,6 @@ def decimal_sum(col: Column | str, alias: str, scale: int = 2) -> Column:
     return F.round(F.sum(c.cast(EXACT_DECIMAL)), scale).cast("double").alias(alias)
 
 
-def decimal_sum_exact(col: Column | str, alias: str) -> Column:
-    """Raw DECIMAL(28,10) sum — for internal merges (counter sinks) where the
-    value keeps flowing; do NOT emit this from a hashed query boundary."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(EXACT_DECIMAL)).alias(alias)
-
-
 def stable_avg(col: Column | str, alias: str, scale: int = 6) -> Column:
     """Exact decimal sum -> one double division -> round: identical bits on
     any engine / any partitioning."""

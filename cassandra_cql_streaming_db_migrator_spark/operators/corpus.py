@@ -564,28 +564,6 @@ def dup_span_census(
     )
 
 
-def decontaminate_catalyst(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram_len: int = 8,
-) -> DataFrame:
-    """Pure-Catalyst reference implementation joining on gram STRINGS —
-    same result as :func:`decontaminate` (modulo the ~2^-61 collision
-    probability); kept for cross-checking the kernel and for callers who
-    need exact string semantics."""
-    grams = word_ngrams(F.col(text_col), ngram_len)
-    corpus_grams = corpus.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("gram")
-    )
-    bench_grams = benchmark.select(F.explode(grams).alias("gram")).distinct()
-    hits = corpus_grams.join(F.broadcast(bench_grams), "gram")
-    return hits.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_shared_ngrams")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Deterministic split + domain mixing
 # ---------------------------------------------------------------------------

@@ -1,9 +1,11 @@
 """Deduplication operators — exact, MinHash+LSH, SimHash (SURVEY §7.2.6).
 
 Beyond the reference's surface: the north-star LLM-data-pipeline ops
-(BASELINE.json:6).  All three run entirely in Catalyst higher-order
-functions (no Python in the hot path) using the cross-engine hash
-primitives from functions.hashing.
+(BASELINE.json:6).  The per-document kernels (MinHash signatures, SimHash
+fingerprints, n-gram hash sets) are numpy passes over Arrow batches
+(functions.fast_hash); the bucketing, joins and verification around them
+are Catalyst.  tests/catalyst_reference.py holds pure-Catalyst reference
+forms of the kernels that the tests check them against.
 
 Scale design (100 TB of documents):
   * exact dedup — hash-groupBy on the content: one shuffle keyed by text;
@@ -22,25 +24,12 @@ Scale design (100 TB of documents):
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from ..functions.hashing import MINHASH_P, MINHASH_PERMS, SIMHASH_MOD, poly_hash
+from ..functions.hashing import MINHASH_PERMS
 from .caching import materialized
-
-
-def default_engine() -> str:
-    """Kernel engine when the caller does not pin one: ``arrow`` (numpy
-    over Arrow batches) unless ``SPARK_GRAFT_DEDUP_ENGINE=hof`` selects the
-    pure-Catalyst twin.  The twins are equality-tested (test_dedup engine
-    parity), so the switch trades only speed, never values — bench.py sets
-    ``hof`` for a run when its worker-pool probe detects a degraded Python
-    worker path (host contention windows measured 4-7x on identical code,
-    VERDICT r11 Performance), keeping the record at JVM-path stability."""
-    return os.environ.get("SPARK_GRAFT_DEDUP_ENGINE", "arrow")
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -51,61 +40,20 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingle_hashes(text: Column, shingle_len: int = 5) -> Column:
-    """Distinct character-shingle hash set as array<long>."""
-    n = F.greatest(F.length(text) - F.lit(shingle_len - 1), F.lit(1))
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.substring(text, i, shingle_len),
-        )
-    )
-    return F.transform(shingles, lambda s: poly_hash(s))
-
-
-def minhash_signature(hashes: Column) -> list[Column]:
-    """16 minhash values: min over the shingle-hash set of (a*h+b) mod p,
-    one frozen (a,b) per signature slot."""
-    def perm_min(a: int, b: int):
-        return lambda acc, h: F.least(acc, (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P))
-
-    return [
-        F.aggregate(hashes, F.lit(MINHASH_P).cast("long"), perm_min(a, b))
-        for a, b in MINHASH_PERMS
-    ]
-
-
 def minhash_signature_df(
     df: DataFrame,
     text_col: str,
     id_col: str,
     shingle_len: int = 5,
-    engine: str | None = None,
 ) -> DataFrame:
-    """(id, sig array<long>) minhash signatures, two interchangeable
-    engines producing identical integers:
+    """(id, sig array<long>) minhash signatures from the numpy kernel over
+    Arrow batches (functions.fast_hash.minhash_signatures) — one C-speed
+    pass per batch.
 
-    * ``arrow`` (default): numpy kernel over Arrow batches
-      (functions.fast_hash.minhash_signatures) — one C-speed pass per
-      batch; measured ~4x faster than the HOF path at sf0.1.
-    * ``hof``: pure-Catalyst higher-order functions — no Python workers
-      at all; kept as the cross-check twin (tests assert equality).
-
-    Both repartition on the id first: the HOF path needs the exchange as a
-    materialization barrier (16 interpreted aggregates would each inline
-    the shingle pipeline), the arrow path uses it to spread Python work
-    across cores when the source has few input splits.  At 100 TB the
-    input has thousands of splits and the repartition can be dropped.
+    The id repartition spreads the Python work across cores when the
+    source has few input splits.  At 100 TB the input has thousands of
+    splits and the repartition can be dropped.
     """
-    src = df.select(F.col(id_col), F.col(text_col)).repartition(F.col(id_col))
-    engine = engine or default_engine()
-    if engine == "hof":
-        hashed = src.select(
-            F.col(id_col), shingle_hashes(F.col(text_col), shingle_len).alias("hh")
-        )
-        sigs = minhash_signature(F.col("hh"))
-        return hashed.select(F.col(id_col), F.array(*sigs).alias("sig"))
-
     import pandas as pd
 
     from ..functions.fast_hash import minhash_signatures
@@ -119,7 +67,11 @@ def minhash_signature_df(
             sigs = minhash_signatures(pdf[text_col].tolist(), shingle_len)
             yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "sig": list(sigs)})
 
-    return src.mapInPandas(compute, schema)
+    return (
+        df.select(F.col(id_col), F.col(text_col))
+        .repartition(F.col(id_col))
+        .mapInPandas(compute, schema)
+    )
 
 
 def _band_signature_cols(bands: int) -> list:
@@ -148,7 +100,6 @@ def lsh_band_stats(
     id_col: str = "doc_id",
     shingle_len: int = 5,
     bands: int = 4,
-    engine: str | None = None,
 ) -> DataFrame:
     """Per-band LSH bucket diagnostics: bucket count, docs bucketed, the
     LARGEST bucket, and the implied candidate-pair count Σ b·(b-1)/2 —
@@ -160,7 +111,7 @@ def lsh_band_stats(
     Shape: signature kernel (narrow) -> one shuffle on (band, band_sig)
     -> metadata-scale per-band rollup.  Integer-only output.
     """
-    signed = minhash_signature_df(df, text_col, id_col, shingle_len, engine)
+    signed = minhash_signature_df(df, text_col, id_col, shingle_len)
     exploded = signed.select(
         F.posexplode(F.array(*_band_signature_cols(bands))).alias(
             "band_idx", "band_sig"
@@ -183,7 +134,6 @@ def minhash_lsh_pairs(
     id_col: str,
     shingle_len: int = 5,
     bands: int = 4,
-    engine: str | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -196,9 +146,7 @@ def minhash_lsh_pairs(
     # (scan + shuffle + kernel, twice).  Signatures are id + 16 longs
     # (~150 B/doc — ~150 GB per 10^9 docs, MEMORY_AND_DISK spills fine),
     # vastly smaller than recomputing from the corpus.
-    signed = materialized(
-        minhash_signature_df(df, text_col, id_col, shingle_len, engine)
-    )
+    signed = materialized(minhash_signature_df(df, text_col, id_col, shingle_len))
     exploded = signed.select(
         id_col,
         "sig",
@@ -238,7 +186,6 @@ def fuzzy_dedup_pairs(
     shingle_len: int = 5,
     ngram_len: int = 3,
     bands: int = 4,
-    engine: str | None = None,
 ) -> DataFrame:
     """The production-shaped fuzzy dedup pipeline: MinHash-LSH candidate
     generation -> exact n-gram Jaccard verification, in one lineage.
@@ -251,55 +198,32 @@ def fuzzy_dedup_pairs(
     runs.  Recall is governed by the LSH parameters, precision by the final
     exact threshold — the standard large-corpus dedup architecture.
     """
-    from .textops import char_ngrams  # local import: textops imports nothing from here
-
-    candidates = minhash_lsh_pairs(df, text_col, id_col, shingle_len, bands, engine).filter(
+    candidates = minhash_lsh_pairs(df, text_col, id_col, shingle_len, bands).filter(
         F.col("est_jaccard") >= F.lit(est_threshold)
     )
-    engine = engine or default_engine()
-    if engine == "hof":
-        grams = F.array_distinct(
-            F.transform(char_ngrams(F.col(text_col), ngram_len), lambda g: poly_hash(g))
-        )
-        gram_sets = df.select(F.col(id_col).alias("__gid"), grams.alias("__g")).repartition(
-            F.col("__gid")
-        )
-    else:
-        import pandas as pd
-
-        from ..functions.fast_hash import ngram_hash_lists
-
-        gschema = StructType(
-            [
-                StructField("__gid", df.schema[id_col].dataType, True),
-                StructField("__g", ArrayType(LongType()), False),
-            ]
-        )
-
-        def compute(batches):
-            for pdf in batches:
-                lists = ngram_hash_lists(pdf[text_col].tolist(), ngram_len)
-                yield pd.DataFrame({"__gid": pdf[id_col].to_numpy(), "__g": lists})
-
-        gram_sets = (
-            df.select(F.col(id_col), F.col(text_col))
-            .repartition(F.col(id_col))
-            .mapInPandas(compute, gschema)
-        )
     # joined against both pair sides below — materialized for the same
-    # reason the minhash signatures are
-    gram_sets = materialized(gram_sets)
+    # reason the minhash signatures are; the id repartition spreads the
+    # kernel like minhash_signature_df's
+    gram_sets = materialized(
+        cross_gram_sets(
+            df.select(F.col(id_col), F.col(text_col)).repartition(F.col(id_col)),
+            "doc",
+            text_col,
+            id_col,
+            ngram_len,
+        )
+    )
     joined = (
         candidates.join(
-            gram_sets.select(F.col("__gid"), F.col("__g").alias("g1")),
-            candidates[f"{id_col}_1"] == F.col("__gid"),
+            gram_sets.select(F.col("__gid_doc"), F.col("g_doc").alias("g1")),
+            candidates[f"{id_col}_1"] == F.col("__gid_doc"),
         )
-        .drop("__gid")
+        .drop("__gid_doc")
         .join(
-            gram_sets.select(F.col("__gid"), F.col("__g").alias("g2")),
-            F.col(f"{id_col}_2") == F.col("__gid"),
+            gram_sets.select(F.col("__gid_doc"), F.col("g_doc").alias("g2")),
+            F.col(f"{id_col}_2") == F.col("__gid_doc"),
         )
-        .drop("__gid")
+        .drop("__gid_doc")
     )
     inter = F.size(F.array_intersect("g1", "g2"))
     union = F.size("g1") + F.size("g2") - inter
@@ -311,45 +235,6 @@ def fuzzy_dedup_pairs(
             (inter.cast("double") / union).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= F.lit(jaccard_threshold))
-    )
-
-
-def token_hashes(text: Column, token_sep: str = " ") -> Column:
-    """Per-token polynomial hashes (mod 2^53-prime) as array<long>."""
-    return F.transform(
-        F.split(text, token_sep),
-        lambda t: F.aggregate(
-            F.filter(F.split(t, ""), lambda x: x != F.lit("")),
-            F.lit(0).cast("long"),
-            lambda acc, ch: (acc * F.lit(31) + F.ascii(ch)) % F.lit(SIMHASH_MOD),
-        ),
-    )
-
-
-def simhash_from_hashes(hh: Column) -> Column:
-    """53-bit SimHash from a materialized token-hash array: bit k is set iff
-    the sum of +-1 votes from token-hash bit k is positive.  Pure integer
-    arithmetic (div/mod instead of shifts — Spark's shift functions take
-    only literal shift amounts, and div-by-power-of-two is portable)."""
-
-    def bit_vote(k: Column) -> Column:
-        pow2k = F.pow(F.lit(2.0), k.cast("double")).cast("long")
-        return F.aggregate(
-            hh,
-            F.lit(0).cast("long"),
-            lambda a, h: a
-            + F.when(((h.cast("long") / pow2k).cast("long")) % 2 == 1, F.lit(1)).otherwise(
-                F.lit(-1)
-            ),
-        )
-
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(52)),
-        F.lit(0).cast("long"),
-        lambda acc, k: acc
-        + F.when(bit_vote(k) > 0, F.pow(F.lit(2.0), k.cast("double")).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ),
     )
 
 
@@ -571,30 +456,11 @@ def simhash_near_pairs_capped(
     return pairs, overflow
 
 
-def simhash_column(text: Column, token_sep: str = " ") -> Column:
-    """One-shot SimHash column (convenience; inlines token hashing into the
-    53 bit-votes).  For whole-table fingerprinting prefer
-    ``simhash_fingerprints`` which materializes token hashes once."""
-    return simhash_from_hashes(token_hashes(text, token_sep))
-
-
 def simhash_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", engine: str | None = None
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Table-level SimHash.  ``arrow`` (default) computes the fingerprint
-    in one numpy pass per Arrow batch; ``hof`` is the pure-Catalyst twin
-    (token-hash array materialized through an exchange — the 53 bit-vote
-    folds would otherwise each recompute tokenization+hashing, measured
-    ~50x waste in interpreted HOF eval).  Identical integers either way."""
-    engine = engine or default_engine()
-    if engine == "hof":
-        hashed = df.select(
-            F.col(id_col), token_hashes(F.col(text_col)).alias("__th")
-        ).repartition(F.col(id_col))
-        return hashed.select(
-            F.col(id_col), simhash_from_hashes(F.col("__th")).alias("simhash")
-        )
-
+    """Table-level 53-bit SimHash, one numpy pass per Arrow batch
+    (functions.fast_hash.simhash_values)."""
     import pandas as pd
 
     from ..functions.fast_hash import simhash_values
@@ -898,25 +764,12 @@ def cross_gram_sets(
     text_col: str,
     id_col: str,
     ngram_len: int = 3,
-    engine: str | None = None,
 ) -> DataFrame:
     """Side-tagged distinct char-n-gram hash sets (``__gid_{side}``,
-    ``g_{side}``) — the verify-stage frame of :func:`minhash_join`,
-    module-level so an incremental consumer (the streaming twin) can
-    precompute the corpus side ONCE and reuse it across microbatches."""
-    engine = engine or default_engine()
-    if engine == "hof":
-        from .textops import char_ngrams
-
-        grams = F.array_distinct(
-            F.transform(
-                char_ngrams(F.col(text_col), ngram_len),
-                lambda g: poly_hash(g),
-            )
-        )
-        return df.select(
-            F.col(id_col).alias(f"__gid_{side}"), grams.alias(f"g_{side}")
-        )
+    ``g_{side}``) — the verify-stage frame of :func:`minhash_join` and
+    :func:`fuzzy_dedup_pairs`, module-level so an incremental consumer
+    (the streaming twin) can precompute the corpus side ONCE and reuse it
+    across microbatches."""
     import pandas as pd
 
     from ..functions.fast_hash import ngram_hash_lists
@@ -948,7 +801,6 @@ def minhash_join(
     shingle_len: int = 5,
     ngram_len: int = 3,
     bands: int = 4,
-    engine: str | None = None,
     broadcast_batch: bool = True,
     corpus_signed: DataFrame | None = None,
     corpus_grams: DataFrame | None = None,
@@ -974,11 +826,11 @@ def minhash_join(
     joins gram sets on candidate ids only; both gram joins move
     candidate-scale rows (AQE broadcasts the candidate side).
     """
-    sb = minhash_signature_df(batch, text_col, id_col, shingle_len, engine)
+    sb = minhash_signature_df(batch, text_col, id_col, shingle_len)
     sc = (
         corpus_signed
         if corpus_signed is not None
-        else minhash_signature_df(corpus, text_col, id_col, shingle_len, engine)
+        else minhash_signature_df(corpus, text_col, id_col, shingle_len)
     )
     n_perms = len(MINHASH_PERMS)
 
@@ -1013,11 +865,11 @@ def minhash_join(
     old_grams = (
         corpus_grams
         if corpus_grams is not None
-        else cross_gram_sets(corpus, "old", text_col, id_col, ngram_len, engine)
+        else cross_gram_sets(corpus, "old", text_col, id_col, ngram_len)
     )
     joined = (
         cand.join(
-            cross_gram_sets(batch, "new", text_col, id_col, ngram_len, engine),
+            cross_gram_sets(batch, "new", text_col, id_col, ngram_len),
             cand.id_new == F.col("__gid_new"),
         )
         .drop("__gid_new")

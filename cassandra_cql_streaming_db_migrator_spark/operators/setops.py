@@ -15,10 +15,6 @@ def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).distinct()
 
 
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
-
-
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
 

@@ -4,8 +4,8 @@ Embeddings are ``array<float>`` columns.  Two paths:
 
   * ``cosine_topk`` — brute-force exact scan: the baseline, and the
     correctness oracle for the ANN path.  All arithmetic is a sequential
-    double-precision fold (F.aggregate), so results are bit-reproducible
-    across engines — JVM-side, codegen'd, no UDF.
+    double-precision fold (numpy over Arrow batches, F.aggregate in the
+    Catalyst folds below), so results are bit-reproducible across engines.
   * ``lsh_ann_topk`` — the scale path: deterministic random-hyperplane LSH.
     Each vector gets a B-bit bucket id (sign of dot(plane_b, v)); search
     touches only the query's bucket.  At 100 TB the bucketing is a narrow
@@ -66,43 +66,29 @@ def cosine_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Exact top-k by cosine against a single query vector (one-row DF).
     Ties broken by id for determinism; TakeOrderedAndProject keeps the
     scan single-pass either way.
 
-    ``arrow``: the query vector is a search *parameter*, not data — pull
-    it to the driver once and score each Arrow batch with the sequential
-    dimension fold (bit-identical to the HOF/SQL fold, C speed).
-    ``hof``: broadcast cross-join + Catalyst fold, zero Python."""
-    if engine == "hof":
-        q = F.broadcast(query.select(F.col(vec_col).alias("__query_vec")))
-        scored = embeddings.crossJoin(q).select(
-            F.col(id_col),
-            cosine(vec_col, "__query_vec").alias("cosine"),
-        )
-        return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-    import numpy as np
+    The query vector is a search *parameter*, not data — pull it to the
+    driver once and score each Arrow batch with the sequential dimension
+    fold (bit-identical to the SQL fold, C speed).  A zero-norm vector
+    (either side) scores a NULL cosine, which sorts last."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
-
-    qrows = query.select(F.col(vec_col)).limit(1).collect()
-    schema_empty = StructType(
-        [embeddings.schema[id_col], StructField("cosine", DoubleType(), True)]
-    )
-    if not qrows:
-        # HOF twin's cross-join yields empty here — match it
-        return embeddings.sparkSession.createDataFrame([], schema_empty)
-    qv = np.asarray(qrows[0][0], dtype=np.float64)
-    qnorm_sq = 0.0
-    for d in range(qv.shape[0]):
-        qnorm_sq = qnorm_sq + qv[d] * qv[d]
 
     schema = StructType(
         [embeddings.schema[id_col], StructField("cosine", DoubleType(), True)]
     )
+    qrows = query.select(F.col(vec_col)).limit(1).collect()
+    if not qrows:
+        # no query row: no scores (as a cross join with it would give)
+        return embeddings.sparkSession.createDataFrame([], schema)
+    qv = np.asarray(qrows[0][0], dtype=np.float64)
+    qnorm_sq = 0.0
+    for d in range(qv.shape[0]):
+        qnorm_sq = qnorm_sq + qv[d] * qv[d]
 
     def score(batches):
         for pdf in batches:
@@ -111,7 +97,8 @@ def cosine_topk(
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             dots = _seq_fold_dots(mat, np.broadcast_to(qv, mat.shape))
             norms = _seq_fold_dots(mat, mat)
-            cos = dots / (np.sqrt(norms) * np.sqrt(qnorm_sq))
+            with np.errstate(invalid="ignore", divide="ignore"):
+                cos = dots / (np.sqrt(norms) * np.sqrt(qnorm_sq))
             yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "cosine": cos})
 
     scored = embeddings.select(id_col, vec_col).mapInPandas(score, schema)
@@ -125,61 +112,11 @@ _LCG_C = 12345
 _LCG_M = 2_147_483_648
 
 
-def _plane_component(b: int, i: Column) -> Column:
-    """Frozen pseudo-random weight in [-1, 1): ((A*(b*4096+i)+C) mod M) / M*2 - 1.
-    All integer arithmetic in long: A*(b*4096+i) reaches ~2^45, and int32
-    literals would silently wrap under non-ANSI semantics."""
-    seed = (
-        F.lit(_LCG_A).cast("long") * (F.lit(b * 4096).cast("long") + i.cast("long"))
-        + F.lit(_LCG_C).cast("long")
-    ) % F.lit(_LCG_M).cast("long")
-    return seed.cast("double") / F.lit(float(_LCG_M)) * 2.0 - 1.0
-
-
-def bucket_id(vec: Column | str, n_bits: int = 8) -> Column:
-    """B-bit LSH bucket: bit b = sign of dot(plane_b, vec).
-
-    String form (column name) renders the whole n_bits-projection tree as
-    ONE SQL parse — the DSL twin costs ~2 py4j lambda builds per bit
-    (~0.5 s at 16 bits, rebuilt per query and per nbits-curve point);
-    identical integer/double arithmetic, parity pinned by
-    tests/test_sqlexpr_parity.py."""
-    if isinstance(vec, str):
-        v = f"`{vec}`"
-        bits = []
-        for b in range(n_bits):
-            plane = (
-                f"CAST(({_LCG_A}L * ({b * 4096}L + CAST(_li AS BIGINT)) "
-                f"+ {_LCG_C}L) % {_LCG_M}L AS DOUBLE) "
-                f"/ {float(_LCG_M)!r}D * 2.0D - 1.0D"
-            )
-            proj = (
-                f"aggregate(zip_with({v}, sequence(0, size({v}) - 1), "
-                f"(_lx, _li) -> CAST(_lx AS DOUBLE) * ({plane})), "
-                "0.0D, (_lacc, _lv) -> _lacc + _lv)"
-            )
-            bits.append(
-                f"CASE WHEN {proj} > 0.0D THEN {1 << b}L ELSE 0L END"
-            )
-        return F.expr("CAST(0 AS BIGINT) + " + " + ".join(bits))
-
-    def weigh(b: int):
-        return lambda x, i: x.cast("double") * _plane_component(b, i)
-
-    out = F.lit(0).cast("long")
-    for b in range(n_bits):
-        proj = F.aggregate(
-            F.zip_with(vec, F.sequence(F.lit(0), F.size(vec) - 1), weigh(b)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        out = out + F.when(proj > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def _plane_matrix(dim: int, n_bits: int):
-    """The frozen LCG hyperplanes as an (n_bits, dim) float64 matrix —
-    exactly _plane_component's integers and float ops."""
+    """The frozen LCG hyperplanes as an (n_bits, dim) float64 matrix:
+    component i of plane b is ((A*(b*4096+i)+C) mod M) / M*2 - 1, in
+    int64 integers then float64 ops (the SQL bucketing folds in
+    queries.llm spell the same formula)."""
     import numpy as np
 
     i = np.arange(dim, dtype=np.int64)
@@ -198,16 +135,10 @@ def with_bucket_ids(
     vec_col: str = "embedding",
     n_bits: int = 8,
     out_col: str = "__bucket",
-    engine: str = "arrow",
 ) -> DataFrame:
-    """Append the LSH bucket id column.  ``arrow`` computes all bit
-    projections in one numpy pass per batch using the same sequential
-    dimension fold as the HOF twin (bit-identical signs); ``hof`` is the
-    pure-Catalyst expression."""
-    if engine == "hof":
-        return df.withColumn(out_col, bucket_id(vec_col, n_bits))
-
-    import numpy as np
+    """Append the B-bit LSH bucket id column (bit b = sign of
+    dot(plane_b, vec)): all bit projections in one numpy pass per batch,
+    each a sequential dimension fold."""
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -239,14 +170,13 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_bits: int = 8,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: score only vectors in the query's LSH bucket.
     Recall is tunable via n_bits (fewer bits -> bigger buckets -> higher
     recall, more compute)."""
-    bucketed = with_bucket_ids(embeddings, vec_col, n_bits, engine=engine)
+    bucketed = with_bucket_ids(embeddings, vec_col, n_bits)
     q = F.broadcast(
-        with_bucket_ids(query, vec_col, n_bits, engine=engine).select(
+        with_bucket_ids(query, vec_col, n_bits).select(
             F.col(vec_col).alias("__query_vec"), F.col("__bucket").alias("__qbucket")
         )
     )
@@ -264,7 +194,6 @@ def lsh_ann_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_bits: int = 8,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k PER QUERY over a query SET (VERDICT r07 ask #3:
     production retrieval serves batches, not ``vec_id = 0``).  One corpus
@@ -277,10 +206,8 @@ def lsh_ann_batch(
 
     Output: (query_id, id, cosine, rn), rn = 1..k per query.
     """
-    bucketed = with_bucket_ids(embeddings, vec_col, n_bits, engine=engine)
-    return lsh_ann_batch_bucketed(
-        bucketed, queries, k, id_col, vec_col, n_bits, engine=engine
-    )
+    bucketed = with_bucket_ids(embeddings, vec_col, n_bits)
+    return lsh_ann_batch_bucketed(bucketed, queries, k, id_col, vec_col, n_bits)
 
 
 def lsh_ann_batch_bucketed(
@@ -290,7 +217,6 @@ def lsh_ann_batch_bucketed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_bits: int = 8,
-    engine: str = "arrow",
 ) -> DataFrame:
     """The probe stage of :func:`lsh_ann_batch` over an ALREADY-BUCKETED
     corpus — the serve-from-store path (VERDICT r08 ask #3): the bucket
@@ -302,7 +228,7 @@ def lsh_ann_batch_bucketed(
     from pyspark.sql import Window
 
     q = F.broadcast(
-        with_bucket_ids(queries, vec_col, n_bits, engine=engine).select(
+        with_bucket_ids(queries, vec_col, n_bits).select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("__query_vec"),
             F.col("__bucket").alias("__qbucket"),
@@ -322,8 +248,8 @@ def lsh_ann_batch_bucketed(
 
 
 def _seq_fold_dots(mat_a, mat_b):
-    """Pairwise dot products as the SAME sequential left-fold the HOF/SQL
-    versions use — a python loop over dimensions, vectorized across rows:
+    """Pairwise dot products as the SAME sequential left-fold the SQL
+    folds use — a python loop over dimensions, vectorized across rows:
     ((0 + x0*y0) + x1*y1) + ... per element.  numpy BLAS dot would change
     the summation order and therefore the low-order bits, breaking
     cross-engine hash parity; this keeps every intermediate IEEE-identical
@@ -381,62 +307,21 @@ def block_top_pairs(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Top-k most-similar pairs within each block, ranked by
     (cosine desc, id_1, id_2).  Output: block, id_1, id_2, cosine, rn.
 
-    ``arrow`` (default): one applyInPandas per block — enumerate the
-    block's pairs with triu indices, sequential-fold dots (bit-identical
-    to the HOF/SQL fold), top-k inside the kernel.  The pair matrix never
-    leaves the executor: no pair-shuffle, no window over O(n^2) rows.
-    ``hof``: pure-Catalyst self-join + fold + row_number twin.
+    One applyInPandas per block: enumerate the block's pairs with triu
+    indices, sequential-fold dots (bit-identical to the SQL fold), top-k
+    inside the kernel.  The pair matrix never leaves the executor: no
+    pair-shuffle, no window over O(n^2) rows.  A pair with a zero-norm
+    vector scores a NULL cosine and ranks last.
 
     Within-block pairwise is O(n^2/block) COMPUTE by design — the block
     column IS the scale control (labels here; LSH buckets at 100 TB) — but
     MEMORY is bounded regardless: pairs are enumerated in _PAIR_ELEM_BUDGET
     chunks with a running top-k merge, so a hot block degrades to slow, not
     to an executor OOM."""
-    if engine == "hof":
-        normed = embeddings.select(
-            F.col(block_col),
-            F.col(id_col),
-            F.col(vec_col),
-            F.sqrt(_dot(vec_col, vec_col)).alias("__norm"),
-        )
-        a = normed.select(
-            F.col(block_col),
-            F.col(id_col).alias("id_1"),
-            F.col(vec_col).alias("v1"),
-            F.col("__norm").alias("n1"),
-        )
-        b = normed.select(
-            F.col(block_col),
-            F.col(id_col).alias("id_2"),
-            F.col(vec_col).alias("v2"),
-            F.col("__norm").alias("n2"),
-        )
-        pairs = a.join(b, on=block_col).filter(F.col("id_1") < F.col("id_2"))
-        scored = pairs.select(
-            F.col(block_col),
-            F.col("id_1").alias(f"{id_col}_1"),
-            F.col("id_2").alias(f"{id_col}_2"),
-            (_dot("v1", "v2") / (F.col("n1") * F.col("n2"))).alias(
-                "cosine"
-            ),
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(block_col).orderBy(
-            F.col("cosine").desc(),
-            F.col(f"{id_col}_1").asc(),
-            F.col(f"{id_col}_2").asc(),
-        )
-        return scored.withColumn("rn", F.row_number().over(w)).filter(
-            F.col("rn") <= k
-        )
-
-    import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
@@ -468,7 +353,8 @@ def block_top_pairs(
         # (ids sorted above, so i<j => id_i<id_j)
         bi = bj = bcos = None
         for i, j in _iter_pair_chunks(n, mat.shape[1], elem_budget):
-            cos = _seq_fold_dots(mat[i], mat[j]) / (norms[i] * norms[j])
+            with np.errstate(invalid="ignore", divide="ignore"):
+                cos = _seq_fold_dots(mat[i], mat[j]) / (norms[i] * norms[j])
             if bi is not None:
                 i = np.concatenate([bi, i])
                 j = np.concatenate([bj, j])
@@ -651,31 +537,6 @@ def ivf_ann_topk(
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
-def cosine_pairs(
-    embeddings: DataFrame,
-    block_col: str,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding near-duplicate pairs within blocks (exact within-block):
-    pairs sharing ``block_col`` with cosine >= threshold.  Blocking bounds
-    the pair count; at scale the block column is an LSH bucket."""
-    a = embeddings.select(
-        F.col(block_col).alias("__blk"), F.col(id_col).alias("id_1"), F.col(vec_col).alias("v1")
-    )
-    b = embeddings.select(
-        F.col(block_col).alias("__blk"), F.col(id_col).alias("id_2"), F.col(vec_col).alias("v2")
-    )
-    joined = a.join(b, on="__blk").filter(F.col("id_1") < F.col("id_2"))
-    scored = joined.select(
-        F.col("id_1").alias(f"{id_col}_1"),
-        F.col("id_2").alias(f"{id_col}_2"),
-        cosine("v1", "v2").alias("cosine"),
-    )
-    return scored.filter(F.col("cosine") >= F.lit(threshold))
-
-
 def quantize_embeddings(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
@@ -687,7 +548,7 @@ def quantize_embeddings(
 
     The rounding is written as ``floor(x + 0.5)`` EXPLICITLY because the
     three engines that must agree bit-for-bit (this Arrow kernel, the
-    Catalyst twin, the DuckDB oracle) all implement ``floor`` as the same
+    Catalyst reference in tests/catalyst_reference.py, the DuckDB oracle) all implement ``floor`` as the same
     exact IEEE operation, while ``round`` differs (banker's in numpy,
     HALF_UP via BigDecimal in Spark).  Every op is an exact-rounded IEEE
     double op applied in the same order — the MSE fold runs dimension-
@@ -696,7 +557,7 @@ def quantize_embeddings(
     Zero vectors quantize against a substitute scale of 1.0 (q = err = 0,
     reported scale stays 0) — division by a zero scale would otherwise
     produce NaN here but LONG-coerced zeros in Catalyst, breaking parity.
-    NULL embeddings yield NULL stats, like the Catalyst twin.
+    NULL embeddings yield NULL stats, like the Catalyst reference.
 
     Reports (scale, max_abs_err, mse) rather than the int8 array so the
     result is scalar-hashable."""
@@ -728,30 +589,6 @@ def quantize_embeddings(
     return df.select(id_col, vec_col).mapInPandas(
         kernel,
         schema=f"{id_col} {id_type}, scale double, max_abs_err double, mse double",
-    )
-
-
-def quantize_embeddings_catalyst(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """Pure-Catalyst twin of :func:`quantize_embeddings` (same floor-based
-    formula, same fold order) — kept for cross-checking the kernel; the
-    interpreted HOF path is ~10x slower on wide vectors."""
-    e = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    scale = F.array_max(F.transform(e, F.abs)) / F.lit(127.0)
-    safe = F.when(scale == F.lit(0.0), F.lit(1.0)).otherwise(scale)
-
-    def err(x: Column) -> Column:
-        return x - F.floor(x / safe + F.lit(0.5)) * safe
-
-    mse = F.aggregate(
-        e, F.lit(0.0), lambda a, x: a + err(x) * err(x)
-    ) / F.size(e)
-    return df.select(
-        id_col,
-        scale.alias("scale"),
-        F.array_max(F.transform(e, lambda x: F.abs(err(x)))).alias("max_abs_err"),
-        mse.alias("mse"),
     )
 
 
@@ -964,7 +801,7 @@ def knn_join(
 
     Numeric parity: per-pair cosine is the same sequential dimension fold as
     _seq_fold_dots (acc built one dimension at a time across the batch x
-    query matrix), so scores are bit-identical to the HOF / DuckDB
+    query matrix), so scores are bit-identical to the Catalyst / DuckDB
     list_reduce fold.  Batch-local top-k uses the global total order
     (cosine desc, neighbor id asc) with an exact >=-threshold tie guard, so
     chunking never changes the result.  Zero-norm corpus vectors (cosine
@@ -1548,9 +1385,7 @@ def mmr_rerank(
     """
     # metadata-scale: k_candidates top-k rows (cosine_topk limit)
     cands = (
-        cosine_topk(
-            embeddings, query, k_candidates, id_col, vec_col, engine="hof"
-        )
+        cosine_topk(embeddings, query, k_candidates, id_col, vec_col)
         .join(embeddings.select(id_col, vec_col), id_col)
         .collect()
     )

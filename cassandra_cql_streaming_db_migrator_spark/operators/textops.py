@@ -138,12 +138,13 @@ def repetition_signals(
 
     These are per-document functions, so the scale shape is an Arrow
     ``mapInPandas`` kernel: narrow, zero shuffles, embarrassingly parallel —
-    exploding tokens through groupBy shuffles (the Catalyst twin below) would
-    shuffle every token instance at 100 TB.  Fractions round via
+    exploding tokens through groupBy shuffles (the Catalyst reference in
+    tests/catalyst_reference.py) would shuffle every token instance at
+    100 TB.  Fractions round via
     ``floor(x * 1e6 + 0.5) / 1e6`` — floor is the same exact IEEE op in
     Python, Catalyst and DuckDB, while ``round()`` semantics differ.
     NULL-text documents are dropped, matching the explode semantics of the
-    Catalyst twin and the SQL oracle.
+    Catalyst reference and the SQL oracle.
     """
     import pandas as pd
 
@@ -194,52 +195,6 @@ def repetition_signals(
         df.select(id_col, text_col)
         .where(F.col(text_col).isNotNull())
         .mapInPandas(kernel, schema=schema)
-    )
-
-
-def repetition_signals_catalyst(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Pure-Catalyst twin of :func:`repetition_signals` (explode -> two-level
-    hash aggregation), kept as the cross-engine verification path: identical
-    output bit-for-bit, but it shuffles exploded token rows, so the Arrow
-    kernel is the production path."""
-
-    def _frac6(num: Column, den: Column) -> Column:
-        return F.floor(num.cast("double") / den * 1000000.0 + F.lit(0.5)) / 1000000.0
-
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("__tok")
-    )
-    wc = toks.groupBy(id_col, "__tok").agg(F.count(F.lit(1)).alias("__c"))
-    words = wc.groupBy(id_col).agg(
-        F.sum("__c").cast("bigint").alias("n_tokens"),
-        F.max("__c").alias("__top_w"),
-    )
-    from .corpus import word_ngrams
-
-    bigrams = df.select(
-        F.col(id_col), F.explode(word_ngrams(F.col(text_col), 2)).alias("__bg")
-    )
-    bc = bigrams.groupBy(id_col, "__bg").agg(F.count(F.lit(1)).alias("__c"))
-    bstats = bc.groupBy(id_col).agg(
-        F.sum("__c").alias("__n_bg"),
-        F.max("__c").alias("__top_bg"),
-        F.sum(F.when(F.col("__c") > 1, F.col("__c")).otherwise(F.lit(0))).alias(
-            "__dup_bg"
-        ),
-    )
-    out = words.join(bstats, id_col, "left")
-    return out.select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        _frac6(F.col("__top_w"), F.col("n_tokens")).alias("top_word_frac"),
-        F.when(F.col("__n_bg") > 0, _frac6(F.col("__top_bg"), F.col("__n_bg")))
-        .otherwise(F.lit(0.0))
-        .alias("top_bigram_frac"),
-        F.when(F.col("__n_bg") > 0, _frac6(F.col("__dup_bg"), F.col("__n_bg")))
-        .otherwise(F.lit(0.0))
-        .alias("dup_bigram_frac"),
     )
 
 

@@ -1435,7 +1435,7 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_proj_sql(x: str, b: int) -> str:
     """Plane-b projection as SQL: the same LCG weights and sequential fold
-    as operators.similarity (_plane_component / _seq_fold_dots)."""
+    as operators.similarity (_plane_matrix / _seq_fold_dots)."""
     return (
         f"list_reduce(list_prepend(0.0, list_transform(range(1, len({x})+1), "
         f"i -> CAST({x}[i] AS DOUBLE) * "

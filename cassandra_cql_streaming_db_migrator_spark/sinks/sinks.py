@@ -322,12 +322,12 @@ def upsert_parquet_partitioned(
         batch.select(*key_columns), on=key_columns, how="left_anti"
     )
     merged = survivors.unionByName(batch, allowMissingColumns=False).localCheckpoint()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.partitionBy(partition_col).mode("overwrite").parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the per-write option, not the session conf: tables run concurrently
+    # on one session, and a static overwrite would drop every untouched
+    # partition
+    merged.write.partitionBy(partition_col).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(target_path)
 
 
 def quarantine_split(df: DataFrame, validity: Column) -> tuple[DataFrame, DataFrame]:

@@ -32,23 +32,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Primary-key metadata for the fixture tables.  The reference discovers PK
-# columns from cluster metadata (CassandraSchemaUtil.java:112-138); parquet
-# has no PK concept, so the engine carries it as table-spec metadata — it
-# drives upsert identity, anti-join keys, and dedup.
-KEY_COLUMNS: dict[str, list[str]] = {
-    "region": ["r_regionkey"],
-    "nation": ["n_nationkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "orders": ["o_orderkey"],
-    "lineitem": ["l_orderkey", "l_linenumber"],
-    "events": ["event_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-}
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

@@ -12,10 +12,12 @@ The reference's whole executor — paged reads (T1), inter-page throttling
   * checkpointing makes a crashed migration restartable from the last
     committed microbatch (the reference restarts from zero or overwrites).
     Delivery is effectively-once for the UPSERT path (replayed batches
-    re-merge the same rows idempotently) and epoch-fenced for the COUNTER
-    path (sinks.counter_merge_parquet records the last applied epoch and
-    skips replays; only a crash inside the data-write/marker-write sliver
-    still replays once — see its docstring).
+    re-merge the same rows idempotently), for the IF-NOT-EXISTS path (a
+    replayed batch finds its own rows and appends nothing) and
+    epoch-fenced for the COUNTER path (sinks.counter_merge_parquet
+    records the last applied epoch and skips replays; only a crash inside
+    the data-write/marker-write sliver still replays once — see its
+    docstring).
 
 The same table-migration spec (plans.spec.TableMigration) drives the
 transform, so batch and streaming migrations share one definition — the
@@ -31,12 +33,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.anti_join import if_not_exists_filter
 from ..operators.compute import with_computed_columns
 from ..operators.filters import apply_filter_chain, pushdown_filter
 from ..operators.ttl import ttl_preserving_columns
 from ..pipeline import default_validity
 from ..plans.spec import TableMigration
-from ..sinks.sinks import counter_merge_parquet, upsert_parquet
+from ..sinks.sinks import (
+    _read_target_if_exists,
+    counter_merge_parquet,
+    upsert_parquet,
+    write_parquet,
+)
 
 
 def apply_migration_transform(stream: DataFrame, spec: TableMigration) -> DataFrame:
@@ -79,7 +87,8 @@ def migrate_stream_to_parquet(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Run a streaming migration into a parquet target with upsert-by-PK
-    semantics in ``foreachBatch`` (K1 for non-Cassandra sinks).  With
+    semantics in ``foreachBatch`` (K1 for non-Cassandra sinks), or, for an
+    ``insert_only_if_not_exist`` table, append-if-absent-by-PK (K2).  With
     ``available_now`` the query drains the bounded source and stops —
     the deterministic test mode; production drops that flag and sets a
     processing-time trigger."""
@@ -100,6 +109,13 @@ def migrate_stream_to_parquet(
                 spec.counter_columns,
                 epoch_id=epoch_id,
             )
+        elif spec.insert_only_if_not_exist:
+            # K2: LWT insert — rows whose key the target already holds are
+            # dropped, the rest appended
+            existing = _read_target_if_exists(batch.sparkSession, target_path)
+            if existing is not None:
+                batch = if_not_exists_filter(batch, existing, spec.key_columns)
+            write_parquet(batch, target_path)
         else:
             upsert_parquet(batch, target_path, spec.key_columns)
 

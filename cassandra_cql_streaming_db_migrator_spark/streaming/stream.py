@@ -32,6 +32,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..sources.parquet import ensure_nanos_as_long, read_parquet
 
@@ -928,8 +929,13 @@ def read_documents_stream_chunked(
             os.utime(os.path.join(d, f), ns=(ns, ns))
     # the written files carry exactly the caller frame's schema (minus a
     # dropped chunk_col) — deriving it from the frame skips a per-drain
-    # parquet listing + footer read on the driver
-    schema = (docs.drop(chunk_col) if chunk_col is not None else docs).schema
+    # parquet listing + footer read on the driver.  Every field is made
+    # nullable, as a file source reads it: a non-nullable flag would let
+    # the optimizer drop NULL checks on values the files may hold.
+    src = docs.drop(chunk_col) if chunk_col is not None else docs
+    schema = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in src.schema.fields]
+    )
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -981,7 +987,7 @@ def streaming_incremental_dedup(
     with ThreadPoolExecutor(max_workers=2) as pool:
         signed_fut = pool.submit(
             lambda: materialized(
-                minhash_signature_df(corpus, text_col, id_col, 5, "arrow"),
+                minhash_signature_df(corpus, text_col, id_col, 5),
                 eager=True,
             )
         )

@@ -22,6 +22,8 @@ from cassandra_cql_streaming_db_migrator_spark.operators.corpus import (
     word_ngrams,
 )
 
+import catalyst_reference as ref
+
 
 class TestWordNgrams:
     def test_basic_and_short_text_guard(self, spark):
@@ -55,9 +57,6 @@ class TestDecontaminate:
         assert out == {1: 2, 3: 2}
 
     def test_arrow_kernel_matches_catalyst(self, spark, sf_dir):
-        from cassandra_cql_streaming_db_migrator_spark.operators.corpus import (
-            decontaminate_catalyst,
-        )
         from cassandra_cql_streaming_db_migrator_spark.sources.parquet import load_table
 
         docs = load_table(spark, sf_dir, "documents")
@@ -69,7 +68,7 @@ class TestDecontaminate:
         }
         exact = {
             r["doc_id"]: r["n_shared_ngrams"]
-            for r in decontaminate_catalyst(corpus, bench).collect()
+            for r in ref.decontaminate_catalyst(corpus, bench).collect()
         }
         assert fast == exact
 
@@ -193,11 +192,8 @@ class TestReviewRegressions:
         bench = spark.createDataFrame(
             [(100, "the quick brown fox runs")], "doc_id long, text string"
         )
-        from cassandra_cql_streaming_db_migrator_spark.operators.corpus import (
-            decontaminate_catalyst,
-        )
         fast = sorted(map(tuple, decontaminate(corpus, bench, ngram_len=3).collect()))
-        exact = sorted(map(tuple, decontaminate_catalyst(corpus, bench, ngram_len=3).collect()))
+        exact = sorted(map(tuple, ref.decontaminate_catalyst(corpus, bench, ngram_len=3).collect()))
         assert fast == exact == [(1, 2)]
 
     def test_empty_token_gram_structural_collision_gone(self):
@@ -214,7 +210,6 @@ class TestQuantize:
     def test_kernel_matches_catalyst_bitwise(self, spark, sf_dir):
         from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
             quantize_embeddings,
-            quantize_embeddings_catalyst,
         )
         from cassandra_cql_streaming_db_migrator_spark.sources.parquet import load_table
 
@@ -222,14 +217,13 @@ class TestQuantize:
         fast = {r["vec_id"]: (r["scale"], r["max_abs_err"], r["mse"])
                 for r in quantize_embeddings(emb).collect()}
         slow = {r["vec_id"]: (r["scale"], r["max_abs_err"], r["mse"])
-                for r in quantize_embeddings_catalyst(emb).collect()}
+                for r in ref.quantize_embeddings_catalyst(emb).collect()}
         assert fast == slow  # exact double equality, no tolerance
 
     def test_null_and_zero_vectors_match_catalyst(self, spark):
         from pyspark.sql import types as T
         from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
             quantize_embeddings,
-            quantize_embeddings_catalyst,
         )
 
         schema = T.StructType([
@@ -242,7 +236,7 @@ class TestQuantize:
         fast = {r["vec_id"]: (r["scale"], r["max_abs_err"], r["mse"])
                 for r in quantize_embeddings(df).collect()}
         slow = {r["vec_id"]: (r["scale"], r["max_abs_err"], r["mse"])
-                for r in quantize_embeddings_catalyst(df).collect()}
+                for r in ref.quantize_embeddings_catalyst(df).collect()}
         assert fast == slow
         assert fast[2] == (None, None, None)
         assert fast[3] == (0.0, 0.0, 0.0)
@@ -313,7 +307,6 @@ class TestRepetitionAndTfidf:
     def test_repetition_kernel_matches_catalyst_twin(self, spark):
         from cassandra_cql_streaming_db_migrator_spark.operators.textops import (
             repetition_signals,
-            repetition_signals_catalyst,
         )
 
         df = spark.sql(
@@ -322,7 +315,7 @@ class TestRepetitionAndTfidf:
             "AS t(doc_id, text)"
         )
         fast = {tuple(r) for r in repetition_signals(df).collect()}
-        slow = {tuple(r) for r in repetition_signals_catalyst(df).collect()}
+        slow = {tuple(r) for r in ref.repetition_signals_catalyst(df).collect()}
         assert fast == slow
 
     def test_tfidf_ranks_distinctive_terms_first(self, spark):
@@ -510,7 +503,6 @@ class TestReviewRegressions2:
     def test_repetition_null_text_dropped_like_twin(self, spark):
         from cassandra_cql_streaming_db_migrator_spark.operators.textops import (
             repetition_signals,
-            repetition_signals_catalyst,
         )
 
         df = spark.sql(
@@ -518,7 +510,7 @@ class TestReviewRegressions2:
             "AS t(doc_id, text)"
         )
         fast = {tuple(r) for r in repetition_signals(df).collect()}
-        slow = {tuple(r) for r in repetition_signals_catalyst(df).collect()}
+        slow = {tuple(r) for r in ref.repetition_signals_catalyst(df).collect()}
         assert fast == slow
         assert {r[0] for r in fast} == {1}
 

@@ -223,3 +223,52 @@ def test_stream_failfast_null_key_keeps_target(spark, tmp_path):
     got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
     assert got == {1: "a"}
     assert glob.glob(target + ".__*") == []
+
+
+def test_stream_if_not_exists_keeps_existing_rows_and_replays_idempotently(
+    spark, tmp_path
+):
+    """An insert-only-if-not-exists table streamed into a target that
+    already holds a key keeps the old value (K2: the LWT insert is not
+    applied), and a replay of the last microbatch (its commit removed, as
+    after a crash between the write and the commit) appends nothing."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cassandra_cql_streaming_db_migrator_spark.plans.spec import TableMigration
+    from cassandra_cql_streaming_db_migrator_spark.streaming.migrate import (
+        migrate_stream_to_parquet,
+    )
+
+    target = str(tmp_path / "target")
+    os.makedirs(target)
+    pq.write_table(
+        pa.table({"k": pa.array([1], pa.int64()), "v": pa.array(["old"], pa.string())}),
+        os.path.join(target, "part-0.parquet"),
+    )
+    spec = TableMigration(
+        table_name="t", key_columns=["k"], simulate_only=False,
+        continue_on_row_error=True, insert_only_if_not_exist=True,
+    )
+    ckpt = str(tmp_path / "ck")
+
+    def run():
+        stream = (
+            spark.readStream.schema("k long, v string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(tmp_path / "src"))
+        )
+        migrate_stream_to_parquet(stream, spec, target, checkpoint_dir=ckpt)
+        return sorted(tuple(r) for r in spark.read.parquet(target).collect())
+
+    _null_key_stream(spark, tmp_path, [[(1, "new"), (2, "b")], [(3, "c")]])
+    first = run()
+    assert first == [(1, "old"), (2, "b"), (3, "c")]
+
+    commits = os.path.join(ckpt, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for f in (last, f".{last}.crc"):
+        os.remove(os.path.join(commits, f))
+    assert run() == first

@@ -19,6 +19,8 @@ from cassandra_cql_streaming_db_migrator_spark.operators.ttl import ttl_preservi
 from cassandra_cql_streaming_db_migrator_spark.sinks.sinks import quarantine_split, upsert_parquet
 from cassandra_cql_streaming_db_migrator_spark.sources.parquet import load_table
 
+import catalyst_reference as ref
+
 
 def java_hashcode(s: str) -> int:
     """Reference implementation of JVM String.hashCode: folds UTF-16 CODE
@@ -287,7 +289,8 @@ class TestAsofAndIntervalJoins:
 
 class TestArrowHofParity:
     """The numpy Arrow kernels must produce bit-identical integers to the
-    pure-Catalyst HOF twins (same folds, same moduli)."""
+    pure-Catalyst higher-order-function references in catalyst_reference
+    (same folds, same moduli)."""
 
     def test_minhash_signatures_identical(self, spark, sf_dir):
         from cassandra_cql_streaming_db_migrator_spark.operators.dedup import (
@@ -296,9 +299,9 @@ class TestArrowHofParity:
 
         docs = load_table(spark, sf_dir, "documents")
         a = sorted((r["doc_id"], tuple(r["sig"])) for r in
-                   minhash_signature_df(docs, "text", "doc_id", engine="arrow").collect())
+                   minhash_signature_df(docs, "text", "doc_id").collect())
         h = sorted((r["doc_id"], tuple(r["sig"])) for r in
-                   minhash_signature_df(docs, "text", "doc_id", engine="hof").collect())
+                   ref.minhash_signature_df(docs, "text", "doc_id").collect())
         assert a == h
 
     def test_simhash_identical(self, spark, sf_dir):
@@ -307,8 +310,8 @@ class TestArrowHofParity:
         )
 
         docs = load_table(spark, sf_dir, "documents")
-        a = sorted(tuple(r) for r in simhash_fingerprints(docs, engine="arrow").collect())
-        h = sorted(tuple(r) for r in simhash_fingerprints(docs, engine="hof").collect())
+        a = sorted(tuple(r) for r in simhash_fingerprints(docs).collect())
+        h = sorted(tuple(r) for r in ref.simhash_fingerprints(docs).collect())
         assert a == h
 
     def test_edge_strings(self, spark):
@@ -325,26 +328,41 @@ class TestArrowHofParity:
             "doc_id long, text string",
         )
         a = sorted((r["doc_id"], tuple(r["sig"])) for r in
-                   minhash_signature_df(df, "text", "doc_id", engine="arrow").collect())
+                   minhash_signature_df(df, "text", "doc_id").collect())
         h = sorted((r["doc_id"], tuple(r["sig"])) for r in
-                   minhash_signature_df(df, "text", "doc_id", engine="hof").collect())
+                   ref.minhash_signature_df(df, "text", "doc_id").collect())
         assert a == h
-        sa = sorted(tuple(r) for r in simhash_fingerprints(df, engine="arrow").collect())
-        sh = sorted(tuple(r) for r in simhash_fingerprints(df, engine="hof").collect())
+        sa = sorted(tuple(r) for r in simhash_fingerprints(df).collect())
+        sh = sorted(tuple(r) for r in ref.simhash_fingerprints(df).collect())
         assert sa == sh
+
+
+def _with_zero_vector(emb):
+    """The embeddings fixture plus one all-zero vector under label 0: its
+    cosine with anything is 0/0, a NULL on both paths."""
+    dim = len(emb.select("embedding").first()[0])
+    zero = emb.sparkSession.createDataFrame([(10**6, [0.0] * dim, 0)], emb.schema)
+    return emb.unionByName(zero)
 
 
 def test_block_top_pairs_arrow_equals_hof(spark, sf_dir):
     """The applyInPandas pair kernel must reproduce the Catalyst fold
-    bit-for-bit (sequential-fold dot, same ranking)."""
+    bit-for-bit (sequential-fold dot, same ranking), including the NULL
+    cosines of a zero vector, which rank last in their block."""
     from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
         block_top_pairs,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = sorted(tuple(r) for r in block_top_pairs(emb, "label", 3, engine="arrow").collect())
-    h = sorted(tuple(r) for r in block_top_pairs(emb, "label", 3, engine="hof").collect())
+    emb = _with_zero_vector(load_table(spark, sf_dir, "embeddings"))
+    a = sorted(tuple(r) for r in block_top_pairs(emb, "label", 3).collect())
+    h = sorted(tuple(r) for r in ref.block_top_pairs(emb, "label", 3).collect())
     assert a == h
+    # k past every block's pair count: the zero vector's pairs are ranked too
+    a_all = sorted(tuple(r) for r in block_top_pairs(emb, "label", 10**5).collect())
+    h_all = sorted(tuple(r) for r in ref.block_top_pairs(emb, "label", 10**5).collect())
+    assert a_all == h_all
+    zero_pairs = [r for r in a_all if 10**6 in (r[1], r[2])]
+    assert zero_pairs and all(r[3] is None for r in zero_pairs)
 
 
 def test_block_pair_kernels_chunked_skewed_block(spark, sf_dir, monkeypatch):
@@ -379,21 +397,26 @@ def test_block_pair_kernels_chunked_skewed_block(spark, sf_dir, monkeypatch):
 
 def test_similarity_arrow_equals_hof(spark, sf_dir):
     """Vectorized cosine scoring and LSH bucketing reproduce the Catalyst
-    folds bit-for-bit."""
+    folds bit-for-bit; a zero vector scores a NULL cosine and sorts last
+    on both paths."""
     from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
         cosine_topk,
         with_bucket_ids,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = _with_zero_vector(load_table(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") == 0)
-    a = [tuple(r) for r in cosine_topk(emb, q, 20, engine="arrow").collect()]
-    h = [tuple(r) for r in cosine_topk(emb, q, 20, engine="hof").collect()]
+    a = [tuple(r) for r in cosine_topk(emb, q, 20).collect()]
+    h = [tuple(r) for r in ref.cosine_topk(emb, q, 20).collect()]
     assert a == h
+    n = emb.count()
+    a_all = [tuple(r) for r in cosine_topk(emb, q, n).collect()]
+    h_all = [tuple(r) for r in ref.cosine_topk(emb, q, n).collect()]
+    assert a_all == h_all and a_all[-1] == (10**6, None)
     ba = sorted((r["vec_id"], r["__bucket"]) for r in
-                with_bucket_ids(emb, n_bits=6, engine="arrow").collect())
+                with_bucket_ids(emb, n_bits=6).collect())
     bh = sorted((r["vec_id"], r["__bucket"]) for r in
-                with_bucket_ids(emb, n_bits=6, engine="hof").collect())
+                ref.with_bucket_ids(emb, n_bits=6).collect())
     assert ba == bh
 
 

@@ -6,6 +6,8 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+import catalyst_reference as ref
+
 
 # --- dup_span_removal -------------------------------------------------------
 
@@ -155,7 +157,6 @@ def test_streaming_incremental_dedup_multibatch_parity(spark, sf_dir):
 
 def test_mmr_rank1_is_top_relevance_and_lambda1_degenerates(spark, sf_dir):
     from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
-        cosine_topk,
         mmr_rerank,
     )
     from cassandra_cql_streaming_db_migrator_spark.sources.parquet import (
@@ -165,7 +166,7 @@ def test_mmr_rank1_is_top_relevance_and_lambda1_degenerates(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0)
     out = mmr_rerank(emb, query, k=5, k_candidates=20, lam=0.75).collect()
-    exact = cosine_topk(emb, query, 5, engine="hof").collect()
+    exact = ref.cosine_topk(emb, query, 5).collect()
     # rank 1 = most relevant regardless of lambda; score = lam * rel
     assert out[0]["vec_id"] == exact[0]["vec_id"]
     assert out[0]["mmr_score"] == 0.75 * out[0]["relevance"]
@@ -174,7 +175,7 @@ def test_mmr_rank1_is_top_relevance_and_lambda1_degenerates(spark, sf_dir):
     assert [r["vec_id"] for r in pure] == [r["vec_id"] for r in exact]
     # ranks are 1..5, selections unique and drawn from the candidates
     assert [r["rank"] for r in out] == [1, 2, 3, 4, 5]
-    cand_ids = {r["vec_id"] for r in cosine_topk(emb, query, 20, engine="hof").collect()}
+    cand_ids = {r["vec_id"] for r in ref.cosine_topk(emb, query, 20).collect()}
     assert {r["vec_id"] for r in out} <= cand_ids
     assert len({r["vec_id"] for r in out}) == 5
 
@@ -184,7 +185,6 @@ def test_mmr_diversity_penalty_changes_selection(spark, sf_dir):
     pure-relevance order on the fixture (otherwise the operator is a
     no-op and the test would pass vacuously)."""
     from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
-        cosine_topk,
         mmr_rerank,
     )
     from cassandra_cql_streaming_db_migrator_spark.sources.parquet import (
@@ -194,7 +194,7 @@ def test_mmr_diversity_penalty_changes_selection(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0)
     diverse = mmr_rerank(emb, query, k=5, k_candidates=20, lam=0.25).collect()
-    exact = cosine_topk(emb, query, 5, engine="hof").collect()
+    exact = ref.cosine_topk(emb, query, 5).collect()
     assert [r["vec_id"] for r in diverse] != [r["vec_id"] for r in exact]
 
 

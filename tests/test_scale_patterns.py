@@ -131,9 +131,13 @@ def test_partitioned_sink_prunes_partitions(spark, sf_dir, tmp_path):
     assert glob.glob(f"{out}/event_type=click/*.parquet")
 
 
-def test_partitioned_upsert_touches_only_affected_partitions(spark, tmp_path):
+def test_partitioned_upsert_touches_only_affected_partitions(
+    spark, tmp_path, monkeypatch
+):
     """Copy-on-write merge scoped to the batch's partitions: untouched
-    partition directories keep their files byte-for-byte."""
+    partition directories keep their files byte-for-byte.  The dynamic
+    overwrite is a per-write option: the session conf stays static and is
+    never written (tables run concurrently on one session)."""
     import glob
     import os
 
@@ -148,6 +152,9 @@ def test_partitioned_upsert_touches_only_affected_partitions(spark, tmp_path):
         [Row(k=1, d="d1", v="old1"), Row(k=2, d="d2", v="old2"), Row(k=3, d="d3", v="old3")],
         "k long, d string, v string",
     )
+    conf_writes = []
+    monkeypatch.setattr(spark.conf, "set", lambda *a: conf_writes.append(a))
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
     upsert_parquet_partitioned(base, path, ["k"], "d")
 
     untouched_before = {
@@ -174,6 +181,8 @@ def test_partitioned_upsert_touches_only_affected_partitions(spark, tmp_path):
         f: os.path.getmtime(f) for f in glob.glob(f"{path}/d=d1/*.parquet")
     }
     assert untouched_after == untouched_before
+    assert glob.glob(f"{path}/d=d3/*.parquet")
+    assert conf_writes == []
 
 
 # ---------------------------------------------------------------------------

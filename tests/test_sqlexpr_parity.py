@@ -187,24 +187,3 @@ def test_dot_cosine_string_forms_match_dsl(emb):
         (dsl_dot(a, b) / (F.sqrt(dsl_dot(a, a)) * F.sqrt(dsl_dot(b, b)))).alias("c"),
     )
     assert new.orderBy("vec_id").collect() == old.orderBy("vec_id").collect()
-
-
-def test_bucket_id_string_form_matches_dsl(emb):
-    from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
-        _plane_component,
-        bucket_id,
-    )
-
-    valid = emb.where(
-        F.col("embedding").isNotNull() & (F.size("embedding") > 0)
-    )
-    for n_bits in (8, 16):
-        new = valid.select(
-            "vec_id", bucket_id("embedding", n_bits).alias("b")
-        )
-        old = valid.select(
-            "vec_id", bucket_id(F.col("embedding"), n_bits).alias("b")
-        )
-        assert (
-            new.orderBy("vec_id").collect() == old.orderBy("vec_id").collect()
-        ), f"n_bits={n_bits}"

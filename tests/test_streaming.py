@@ -525,3 +525,41 @@ def test_stream_zscore_state_carries_across_microbatches(spark, tmp_path):
     ).collect()
     per_batch = sorted((r.n_tested, r.n_anomalies) for r in out)
     assert per_batch == [(0, 0), (2, 1)]
+
+
+def test_chunked_stream_schema_is_nullable(spark, tmp_path):
+    """A caller frame's non-nullable flags do not reach the file stream's
+    schema: every field reads as nullable.  Spark's file source forces
+    that by default; the conf that does so is switched off here, so the
+    test checks the schema the function itself builds."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from cassandra_cql_streaming_db_migrator_spark.streaming.stream import (
+        read_documents_stream_chunked,
+    )
+
+    schema = StructType(
+        [
+            StructField("doc_id", LongType(), False),
+            StructField("text", StringType(), True),
+            StructField("chunk", LongType(), False),
+        ]
+    )
+    docs = spark.createDataFrame([(1, "a", 0), (2, None, 1)], schema)
+    assert not docs.schema["doc_id"].nullable
+    force = "spark.sql.streaming.fileSource.schema.forceNullable"
+    prev = spark.conf.get(force, None)
+    spark.conf.set(force, "false")
+    try:
+        for chunk_col, d in ((None, "plain"), ("chunk", "by_chunk")):
+            stream = read_documents_stream_chunked(
+                spark, docs, n_chunks=2, scratch_dir=str(tmp_path / d),
+                chunk_col=chunk_col,
+            )
+            assert stream.isStreaming
+            assert all(f.nullable for f in stream.schema.fields), stream.schema
+    finally:
+        if prev is None:
+            spark.conf.unset(force)
+        else:
+            spark.conf.set(force, prev)

@@ -14,8 +14,9 @@ Usage:
       [--reps 4] [--json out.json] query [query ...]
 
 Variant env vars are set before each BUILD+RUN and removed after, so the
-knob must be read at query-build time (e.g. SPARK_GRAFT_MATERIALIZE_LAZY,
-SPARK_GRAFT_DEDUP_ENGINE).
+knob must be read at query-build time (e.g. SPARK_GRAFT_NO_MATERIALIZE,
+SPARK_GRAFT_MATERIALIZE_EAGER).  Session-conf variants go through
+--conf-a/--conf-b instead.
 """
 
 from __future__ import annotations
