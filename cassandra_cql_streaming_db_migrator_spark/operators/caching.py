@@ -80,16 +80,22 @@ def materialized(df: DataFrame, eager: bool = False) -> DataFrame:
     structure, the signature kernel executing ONCE in both) — on Spark
     4.1 the block manager's per-block write locks make the concurrent
     stages share the first materialization, so lazy does NOT double
-    compute.  What eager does do is serialize one driver-paced job per
-    barrier at operator-BUILD time; interleaved counterbalanced A/Bs
+    compute.  What eager does do is also run the barrier's final stage
+    at operator-BUILD time; interleaved counterbalanced A/Bs
     (tools/ab_compare.py, committed in OPTIMIZATION_r13.md) measured the
     lazy variant at 0.70-0.76x median wall on every CC-loop consumer
     (curation_funnel, source_dup_report, dedup_components_star,
     dedup_canonical, fuzzy_dedup, minhash_pairs) and parity elsewhere —
     the exact regression set VERDICT r12 flagged.  The barrier contract
     (computed once, shared blocks, ContextCleaner release) is identical;
-    only WHEN the materialization job runs moves.
-    ``SPARK_GRAFT_MATERIALIZE_EAGER=1`` keeps the r12 behaviour A/B-able.
+    only WHEN the final stage runs moves.  Lazy does not make a barrier
+    free of driver-paced jobs: under AQE, ``localCheckpoint(eager=False)``
+    still runs every shuffle-map stage of its plan at the moment it is
+    called, and only the final stage moves to the consumer's action
+    (measured: a lazy checkpoint per PageRank round cost 6 jobs per round
+    inside the query's build).  A round loop that makes no driver decision
+    should unroll its rounds and cut lineage every few rounds instead
+    (operators.graph.pagerank_fixed_point).
 
     ``eager=True`` opts a single site back into build-time materialization
     — the overlap primitive (guide §2.6): a caller that runs an
@@ -99,6 +105,4 @@ def materialized(df: DataFrame, eager: bool = False) -> DataFrame:
     action."""
     if os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
         return df
-    if eager or os.environ.get("SPARK_GRAFT_MATERIALIZE_EAGER"):
-        return df.localCheckpoint(eager=True)
-    return df.localCheckpoint(eager=False)
+    return df.localCheckpoint(eager=eager)

@@ -959,7 +959,13 @@ def _cell_assign_expr(cell_ids, cvecs, m, sub_dim):
     zip_with chain adds in the same ds0+ds1+ds2+ds3 order) at ~1/n_cells
     the expression-tree size, which matters because streaming twins
     re-analyze this tree every microbatch (parity asserted on the full
-    fixture by tests/test_sqlexpr_parity.py)."""
+    fixture by tests/test_sqlexpr_parity.py).
+
+    The distance array is bound ONCE, as the lambda variable of a
+    one-element ``transform``, and the argmin reads it twice: spelled
+    inline for both ``array_position`` and ``array_min``, the tree was
+    twice the size at analysis and every row evaluated it twice (Catalyst
+    does not share subexpressions that hold lambda variables)."""
     per_sub = []
     for s in range(m):
         slices = sqlexpr.arr_arr_d(
@@ -971,8 +977,9 @@ def _cell_assign_expr(cell_ids, cvecs, m, sub_dim):
     for s in range(1, m):
         darr = f"zip_with({darr}, {per_sub[s]}, (p, q) -> p + q)"
     return F.expr(
+        f"element_at(transform(array({darr}), d -> "
         f"element_at({sqlexpr.arr_l(cell_ids)}, "
-        f"CAST(array_position({darr}, array_min({darr})) - 1 AS INT) + 1)"
+        f"CAST(array_position(d, array_min(d)) - 1 AS INT) + 1)), 1)"
     )
 
 

@@ -23,11 +23,10 @@ Floor division leaks a little mass per round (< outdeg + 1 units of 1e-12
 per node) — irrelevant for ranking and a price worth paying for a
 cross-engine-hashable iterative algorithm.
 
-Scale shape per round: one shuffle join (edges x ranks on src) + one
-aggregate by dst — the minimum for message passing.  The edge list is
-hash-partitioned once and reused; with few fixed rounds the unrolled plan
-stays shallow (for tens of rounds, localCheckpoint per round like
-connected_components).
+Scale shape per round: one join (edges x ranks on src) + one aggregate
+by dst — the minimum for message passing.  The edge list is
+hash-partitioned once and reused; the rounds unroll into one plan, cut by
+a lazy checkpoint every ``PR_CHECKPOINT_EVERY`` rounds and at the end.
 """
 
 from __future__ import annotations
@@ -37,6 +36,14 @@ from pyspark.sql import functions as F
 from .caching import materialized
 
 PR_SCALE = 1_000_000_000_000  # 10^12 fixed-point units of rank mass
+
+
+#: Rounds between lineage cuts in :func:`pagerank_fixed_point`.  The rounds
+#: unroll into one plan that grows by one join and one aggregate per round;
+#: a lazy checkpoint every this many rounds keeps that plan's depth bounded
+#: for long loops, and costs the round loop one driver-paced pass over the
+#: stages planned so far.
+PR_CHECKPOINT_EVERY = 8
 
 
 def pagerank_fixed_point(
@@ -50,74 +57,72 @@ def pagerank_fixed_point(
     exact fixed-point arithmetic.  Every node must have outdegree >= 1
     (callers with dangling nodes should symmetrize or add self-loops —
     the trade-graph caller symmetrizes).  Returns ``node, rank_fp`` with
-    rank_fp in units of 1/PR_SCALE.
+    rank_fp in units of 1/PR_SCALE, for nodes with outdegree >= 1 only.
     """
-    # Iterative-lineage discipline (same as connected_components): each
-    # round references `ranks` twice (message source + degree carry), so an
-    # unrolled plan DOUBLES the ranks subtree per iteration — 3 rounds of
-    # that measured 80 shuffles in the physical plan.  localCheckpoint the
-    # edge list once and the ranks each round: every round's plan is then
-    # one join + one aggregate over materialized blocks.
-    #
-    # The edge list is hash-partitioned on the message key BEFORE the
-    # checkpoint: the checkpoint preserves outputPartitioning, so every
-    # round's join moves only the rank table — the edges (the big side,
-    # |E| >> |V|) never re-shuffle.  Measured 1.8x on the sf0.1 trade
-    # graph; at real scale this is the difference between shuffling the
-    # graph once and shuffling it every round.
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .repartition(F.col("src"))
-        .localCheckpoint()
+    # The edge list carries everything a round needs besides the ranks:
+    # the source's outdegree and the node count, computed once and
+    # localCheckpointed once.  It is hash-partitioned on the message key
+    # BEFORE the checkpoint: the checkpoint preserves outputPartitioning,
+    # so a round's join moves only the rank table — the edges (the big
+    # side, |E| >> |V|) never re-shuffle.
+    e0 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).repartition(
+        F.col("src")
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    n_nodes = deg.agg(F.count(F.lit(1)).alias("__n"))
+    deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # metadata-scale broadcast: one row (node count) rides to every task
-    # Lazy round checkpoints (r13): the iteration count is FIXED — no
-    # driver decision depends on a round's result — so nothing needs to
-    # materialize until the caller's action.  Each checkpoint still
-    # truncates the logical plan (no per-round subtree doubling) and the
-    # first materialization's blocks are shared by both per-round
-    # references (the Spark 4.1 block-write-lock sharing the r13 eager-
-    # barrier A/B established); what disappears is one blocking driver-
-    # paced job per round.  Values identical, measured ~10-18% faster
-    # on pagerank_trade.
-    ranks = (
-        deg.crossJoin(F.broadcast(n_nodes))
-        .select(
-            F.col("src").alias("node"),
-            "outdeg",
-            F.expr(f"CAST({PR_SCALE} AS BIGINT) DIV __n").alias("rank_fp"),
-            F.col("__n"),
-        )
-        .localCheckpoint(eager=False)
+    n_nodes = deg.agg(F.count(F.lit(1)).alias("__n"))
+    # an edge into a node without out-edges carries rank mass nowhere:
+    # dropping it (after outdeg counted it) keeps such nodes out of every
+    # round, so the result needs no final filter
+    e = (
+        e0.join(deg.select(F.col("src").alias("dst")), "dst", "left_semi")
+        .join(deg, "src")
+        .crossJoin(F.broadcast(n_nodes))
+        .localCheckpoint()
     )
     base = F.expr(
         f"CAST({100 - damping_pct} AS BIGINT) * (CAST({PR_SCALE} AS BIGINT) DIV __n) DIV 100"
     )
-    for _ in range(iterations):
-        msgs = e.join(ranks, e["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"),
-            F.expr("rank_fp DIV outdeg").alias("contrib"),
-        )
-        # every node receives messages (callers guarantee in-edges via
-        # symmetrization), so an inner join back onto the degree table is
-        # total — no coalesce-to-base needed
-        sums = msgs.groupBy("node").agg(F.sum("contrib").alias("__s"))
+    # Each round references ``ranks`` once (the message join), so the
+    # rounds unroll into a plan that grows linearly; the round loop makes
+    # no driver decision, so nothing materializes until the final
+    # checkpoint.  Under AQE even a lazy localCheckpoint runs every
+    # shuffle-map stage of its plan when it is called (only the final
+    # stage waits for the consumer), so a checkpoint per round cost ~6
+    # driver-paced jobs per round; the unrolled rounds run ~1.
+    # Round 1 needs no join: every source starts at PR_SCALE DIV __n.
+    msgs = e.select(
+        F.col("dst").alias("node"),
+        F.expr(f"CAST({PR_SCALE} AS BIGINT) DIV __n DIV outdeg").alias("contrib"),
+        "__n",
+    )
+    for i in range(iterations):
+        if i:
+            msgs = e.join(ranks, e["src"] == ranks["node"]).select(
+                F.col("dst").alias("node"),
+                F.expr("rank_fp DIV outdeg").alias("contrib"),
+                "__n",
+            )
+        # a node that receives no message holds no rank, as in the
+        # reference iteration's inner join
         ranks = (
-            ranks.drop("rank_fp")
-            .join(sums, "node")
+            msgs.groupBy("node")
+            .agg(F.sum("contrib").alias("__s"), F.max("__n").alias("__n"))
             .select(
                 "node",
-                "outdeg",
                 (base + F.expr(f"CAST({damping_pct} AS BIGINT) * __s DIV 100")).alias(
                     "rank_fp"
                 ),
-                "__n",
             )
-            .localCheckpoint(eager=False)
         )
-    return ranks.select("node", "rank_fp")
+        if (i + 1) % PR_CHECKPOINT_EVERY == 0 and i + 1 < iterations:
+            ranks = ranks.localCheckpoint(eager=False)
+    if iterations < 1:
+        ranks = deg.crossJoin(F.broadcast(n_nodes)).select(
+            F.col("src").alias("node"),
+            F.expr(f"CAST({PR_SCALE} AS BIGINT) DIV __n").alias("rank_fp"),
+        )
+    return ranks.localCheckpoint(eager=False)
 
 
 def pagerank_sql(

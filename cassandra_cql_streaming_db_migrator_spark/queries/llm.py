@@ -65,6 +65,7 @@ from ..operators.textops import (
     tfidf_top_terms,
     trigram_lm_score,
 )
+from ..session import leg_session
 from ..sources.parquet import load_table
 from . import QueryDef
 from ..operators.caching import materialized
@@ -5601,23 +5602,6 @@ _MAINT_NQ = 8
 _MAINT_TOPK = 10
 
 
-def _clone(spark: SparkSession) -> SparkSession:
-    """A session clone for a concurrent pipeline leg: private SQLConf
-    (run_to_memory's state-width window stays leg-local), shared
-    SparkContext and warehouse.  The engine's runtime-settable conf is
-    re-applied, and the parent's shuffle width is carried over so the
-    clone plans data-scale shuffles identically."""
-    from ..session import tune_existing
-
-    s = spark.newSession()
-    tune_existing(s)
-    s.conf.set(
-        "spark.sql.shuffle.partitions",
-        spark.conf.get("spark.sql.shuffle.partitions"),
-    )
-    return s
-
-
 def _metric_table(
     spark, sf_dir: str, name: str, compute, compute_session=None
 ) -> DataFrame:
@@ -5683,7 +5667,7 @@ def maintenance_planner(
     def leg(name, compute):
         def run():
             return _metric_table(
-                spark, sf_dir, name, compute, compute_session=_clone(spark)
+                spark, sf_dir, name, compute, compute_session=leg_session(spark)
             )
 
         return run

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sqlexpr
+from ..operators.driverside import arrow_frame
 
 from ..streaming.stream import (
     latest_by_key_agg,
@@ -887,6 +888,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result row-for-row equals batch coarse_cell_drift over the full
     corpus — the shared oracle."""
     from ..operators.clustering import _cell_assign_expr, _coarse_centroids
+    from ..session import leg_session
     from ..sources.parquet import load_table
     from ..streaming.stream import read_documents_stream_chunked
 
@@ -896,16 +898,10 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_where = F.col("vec_id") % 10 != 0
     base = emb.where(base_where)
     m, sub_dim, n_cells = 4, 16, 8
-    # quantizer training (driver-paced collects) and the arrival-chunk
-    # scratch write are independent legs — overlap them (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _arr_fut = _pool.submit(
-            read_documents_stream_chunked, spark, emb.where(~base_where), 4
-        )
-        cell_ids, cvecs = _coarse_centroids(
-            base, n_cells, "embedding", "vec_id", m, sub_dim
-        )
-        arrivals = _arr_fut.result()
+    # The drain runs on a private session clone: run_to_memory narrows the
+    # session-wide shuffle width around the drain, and the base census
+    # plans on the caller's session at the same time.
+    drain_session = leg_session(spark)
 
     def with_cell(df: DataFrame) -> DataFrame:
         valid = df.where(
@@ -924,27 +920,46 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell", _cell_assign_expr(cell_ids, cvecs, m, sub_dim)
         )
 
-    live = (
-        with_cell(arrivals)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_arr"))
-    )
-    # state is <= n_cells rows by construction -> n_cells state partitions
-    drained = run_to_memory(live, output_mode="complete", state_partitions=n_cells)
+    def base_census():
+        # metadata-scale: <= n_cells census rows
+        return (
+            with_cell(base)
+            .groupBy("cell")
+            .agg(F.count(F.lit(1)).alias("n_base"))
+            .collect()
+        )
 
-    base_counts = (
-        with_cell(base).groupBy("cell").agg(F.count(F.lit(1)).alias("n_base"))
-    )
-    # both censuses are <= n_cells rows — the report FINISH is
-    # metadata-scale driver arithmetic (the mmr_rerank/centroids
-    # contract), and pure integer, so it hash-checks.  Every cell an
-    # arrival can land in holds its own centroid, which is a BASE row by
-    # construction, so driving off the base census loses no cell.
-    arr = {r["cell"]: r["n_arr"] for r in drained.collect()}
-    # metadata-scale: <= n_cells census rows
-    cells = {
-        r["cell"]: int(r["n_base"]) for r in base_counts.collect()
-    }
+    with ThreadPoolExecutor(max_workers=1) as _pool:
+        # quantizer training (driver-paced collects) and the arrival-chunk
+        # scratch write are independent legs — overlap them (guide §2.6)
+        _arr_fut = _pool.submit(
+            read_documents_stream_chunked,
+            drain_session,
+            emb.where(~base_where),
+            4,
+        )
+        cell_ids, cvecs = _coarse_centroids(
+            base, n_cells, "embedding", "vec_id", m, sub_dim
+        )
+        arrivals = _arr_fut.result()
+        # the base census and the drain are independent too
+        _base_fut = _pool.submit(base_census)
+        live = (
+            with_cell(arrivals)
+            .groupBy("cell")
+            .agg(F.count(F.lit(1)).alias("n_arr"))
+        )
+        # state is <= n_cells rows by construction -> n_cells state partitions
+        drained = run_to_memory(
+            live, output_mode="complete", state_partitions=n_cells
+        )
+        # both censuses are <= n_cells rows — the report FINISH is
+        # metadata-scale driver arithmetic (the mmr_rerank/centroids
+        # contract), and pure integer, so it hash-checks.  Every cell an
+        # arrival can land in holds its own centroid, which is a BASE row by
+        # construction, so driving off the base census loses no cell.
+        arr = {r["cell"]: r["n_arr"] for r in drained.collect()}
+        cells = {r["cell"]: int(r["n_base"]) for r in _base_fut.result()}
     tb = sum(cells.values())
     ta = tb + sum(arr.values())
     rows = []
@@ -954,7 +969,8 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         sb = 1_000_000 * n_base // tb
         sa = 1_000_000 * n_all // ta
         rows.append((cell, n_base, n_all, sb, sa, abs(sa - sb)))
-    return spark.createDataFrame(
+    return arrow_frame(
+        spark,
         rows,
         "cell long, n_base long, n_all long, share_base_ppm long, "
         "share_all_ppm long, share_drift_ppm long",
@@ -1052,7 +1068,8 @@ def stream_distortion_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         mb = sb // nb
         ma = s_all // n_all
         rows.append((cell, nb, n_all, mb, ma, abs(ma - mb)))
-    return spark.createDataFrame(
+    return arrow_frame(
+        spark,
         rows,
         "cell long, n_base long, n_all long, mean_dist_base_u long, "
         "mean_dist_all_u long, dist_drift_u long",
@@ -1600,8 +1617,8 @@ def index_tombstone_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (cell, pre[cell], purged.get(cell, 0), post.get(cell, 0))
         for cell in sorted(pre)
     ]
-    return spark.createDataFrame(
-        rows, "cell long, n_folded long, n_purged long, n_after long"
+    return arrow_frame(
+        spark, rows, "cell long, n_folded long, n_purged long, n_after long"
     )
 
 

@@ -226,6 +226,31 @@ def test_pagerank_partitioning_invariant(spark):
     assert a == b  # exact integer arithmetic: bit-identical on any layout
 
 
+def test_pagerank_rounds_add_few_jobs(spark):
+    """The rounds unroll into one plan: going from 4 to 8 rounds adds about
+    one Spark job per round (a checkpoint per round cost 6)."""
+    edges = [(i, (i * 3) % 11 + 100) for i in range(50)]
+    sym = edges + [(b, a) for a, b in edges]
+    e = spark.createDataFrame([Row(src=a, dst=b) for a, b in sym])
+    sc = spark.sparkContext
+    jobs = {}
+    for its in (4, 8):
+        group = f"pagerank_rounds_{its}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank_fixed_point(e, iterations=its).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[its] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[8] - jobs[4] <= 8, jobs
+
+
+def test_pagerank_returns_only_nodes_with_out_edges(spark):
+    # 3 has no out-edge: it receives rank mass but is not a ranked node
+    ranks = _pr_dict(spark, [(1, 2), (2, 1), (2, 3)])
+    assert set(ranks) == {1, 2}
+
+
 def test_pagerank_mass_approximately_conserved(spark):
     ranks = _pr_dict(spark, [(1, 2), (2, 1), (2, 3), (3, 2)])
     total = sum(ranks.values())

@@ -12,6 +12,7 @@ import pytest
 from cassandra_cql_streaming_db_migrator_spark.operators.driverside import (
     DEFAULT_MAX_BROADCAST_ROWS,
     BroadcastContractError,
+    arrow_frame,
     collect_bounded,
 )
 from cassandra_cql_streaming_db_migrator_spark.sources.parquet import load_table
@@ -72,3 +73,14 @@ def test_contrastive_auto_chunks_past_bound_instead_of_raising(spark):
     anchors = emb.filter(F.col("vec_id") % 50 == 0)
     out = contrastive_topk(emb, anchors, max_anchor_rows=2)
     assert out.count() > 0  # ran to completion through the chunked path
+
+
+def test_arrow_frame_matches_list_frame(spark):
+    """The Arrow-built report frame has the names, types, nullability and
+    rows that createDataFrame(list) gives, including for no rows."""
+    ddl = "cell long, n long, label string, share double"
+    for rows in ([(3, 10, "a", 0.5), (1, None, None, None)], []):
+        got = arrow_frame(spark, rows, ddl)
+        want = spark.createDataFrame(rows, ddl)
+        assert got.schema == want.schema
+        assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)

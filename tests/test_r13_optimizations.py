@@ -55,10 +55,10 @@ def test_jaccard_join_matches_definition_at_boundaries(spark):
 
 
 def test_session_clone_isolates_sqlconf(spark):
-    from cassandra_cql_streaming_db_migrator_spark.queries.llm import _clone
+    from cassandra_cql_streaming_db_migrator_spark.session import leg_session
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    clone = _clone(spark)
+    clone = leg_session(spark)
     assert clone.conf.get("spark.sql.shuffle.partitions") == prev
     clone.conf.set("spark.sql.shuffle.partitions", "3")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev

@@ -119,6 +119,20 @@ def test_cell_assign_matches_dsl(emb, quantizer):
     assert new.orderBy("vec_id").collect() == old.orderBy("vec_id").collect()
 
 
+def test_cell_assign_spells_distance_tree_once(emb, quantizer):
+    """The per-cell distance array is bound once and read twice by the
+    argmin: each subspace column appears once in the analyzed projection
+    (spelled inline for array_position AND array_min it appeared twice,
+    doubling the tree Catalyst analyzes and every row evaluates)."""
+    _, cell_ids, cvecs = quantizer
+    df = _sub_slices(emb).select(
+        _cell_assign_expr(cell_ids, cvecs, M, SUB_DIM).alias("cell")
+    )
+    projection = df._jdf.queryExecution().analyzed().projectList().toString()
+    for s in range(M):
+        assert projection.count(f"__sub{s}#") == 1, (s, projection)
+
+
 def test_distortion_frame_matches_dsl(emb, quantizer):
     cents, cell_ids, cvecs = quantizer
     new = distortion_frame(

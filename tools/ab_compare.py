@@ -14,8 +14,8 @@ Usage:
       [--reps 4] [--json out.json] query [query ...]
 
 Variant env vars are set before each BUILD+RUN and removed after, so the
-knob must be read at query-build time (e.g. SPARK_GRAFT_NO_MATERIALIZE,
-SPARK_GRAFT_MATERIALIZE_EAGER).  Session-conf variants go through
+knob must be read at query-build time (e.g. SPARK_GRAFT_NO_MATERIALIZE).
+Session-conf variants go through
 --conf-a/--conf-b instead.
 """
 
