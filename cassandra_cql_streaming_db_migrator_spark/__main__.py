@@ -4,11 +4,13 @@
     python -m cassandra_cql_streaming_db_migrator_spark -configYaml cfg.yaml \
         --tables-dir /root/testdata/sf0.001 [--execute]
 
-Source (and optional target) tables resolve to ``<tables-dir>/<name>.parquet``
-— the self-contained environment's stand-in for the reference's two CQL
-connections; production wiring swaps in sources.cassandra readers.  The
-final per-table stats report mirrors DbMigrator.java:91-106; any table's
-plan failure aborts before any table runs (DbMigrator.java:72-74).
+Source tables resolve to ``<tables-dir>/<name>.parquet`` and targets to
+``<output-dir>/<target>.parquet``, read before the job and written there by
+each table's sink mode (``sinks.write_table``) — the self-contained
+environment's stand-in for the reference's two CQL connections; production
+wiring swaps in sources.cassandra readers.  The final per-table stats report
+mirrors DbMigrator.java:91-106; any table's plan failure aborts before any
+table runs (DbMigrator.java:72-74).
 """
 
 from __future__ import annotations
@@ -48,41 +50,34 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                         help="write for real (default honors each table's "
                              "simulateOnly flag; reference default is dry-run)")
     parser.add_argument("--output-dir", default=None,
-                        help="directory for executed upsert targets "
-                             "(default: <tables-dir>_out)")
+                        help="directory the targets are read from and written "
+                             "to (default: <tables-dir>_out)")
     args = parser.parse_args(argv)
 
     from .pipeline import run_pipeline
     from .plans.spec import load_spec
     from .session import build_session
-    from .sinks.sinks import upsert_parquet
+    from .sinks.sinks import _read_target_if_exists, write_table
     from .sources.parquet import load_table
 
     spec = load_spec(args.config)
     own_session = spark is None
     spark = spark or build_session(app_name="cassandra_cql_streaming_db_migrator_cli")
+    out_dir = args.output_dir or f"{args.tables_dir.rstrip('/')}_out"
 
-    tables = {t.table_name: load_table(spark, args.tables_dir, t.table_name)
-              for t in spec.tables}
-    targets = {}
-    for t in spec.tables:
-        if t.target != t.table_name:
-            try:
-                targets[t.target] = load_table(spark, args.tables_dir, t.target)
-            except Exception:
-                pass  # target table need not pre-exist
+    def target_path(table_spec):
+        return f"{out_dir}/{table_spec.target}.parquet"
 
-    sink = None
-    if args.execute:
-        out_dir = args.output_dir or f"{args.tables_dir.rstrip('/')}_out"
-
-        def sink(df, table_spec):
-            upsert_parquet(df, f"{out_dir}/{table_spec.target}.parquet",
-                           table_spec.key_columns or df.columns)
-            return None  # rows counted by the pipeline's observation
+    def sink(df, table_spec):  # rows are counted by the pipeline's observation
+        write_table(df, table_spec, target_path(table_spec))
 
     try:
-        results = run_pipeline(spark, spec, tables, targets=targets, sink=sink)
+        tables = {t.table_name: load_table(spark, args.tables_dir, t.table_name)
+                  for t in spec.tables}
+        targets = {t.target: _read_target_if_exists(spark, target_path(t))
+                   for t in spec.tables}
+        results = run_pipeline(spark, spec, tables, targets=targets,
+                               sink=sink if args.execute else None)
     except Exception as e:
         print(f"migration aborted: {e}", file=sys.stderr)
         return 1

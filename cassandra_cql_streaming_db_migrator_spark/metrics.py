@@ -10,15 +10,8 @@ second full scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def observed(df: DataFrame, name: str = "migration") -> tuple[DataFrame, Observation]:
-    """Attach a row-count observation to a DataFrame; read
-    ``obs.get['rows']`` after the terminal action."""
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 class LatencyHistogram:
@@ -132,7 +125,8 @@ def conservation_stats(
 ) -> DataFrame:
     """Dry-run conservation report as data (K5/A2): one row with
     rows_read = rows_passed + rows_filtered.  Used by the oracle-checked
-    ``dry_run_stats`` query; runtime pipelines use ``observed`` instead."""
+    ``dry_run_stats`` query; the migrate pipeline observes the same counters
+    on its sink action instead (``pipeline.build_observed_plan``)."""
     r = read_df.agg(F.count(F.lit(1)).alias("rows_read"))
     p = passed_df.agg(F.count(F.lit(1)).alias("rows_passed"))
     return r.crossJoin(p).select(

@@ -24,21 +24,16 @@ on purpose.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def if_not_exists_filter(
     source: DataFrame,
     target_keys: DataFrame,
     key_columns: list[str],
-    broadcast_target: bool | None = None,
 ) -> DataFrame:
     """Drop source rows whose full PK already exists in ``target_keys``.
 
     ``rowsMigrated`` parity: the reference counts only *applied* LWT writes
     (DMP:399-400); rows surviving this anti-join are exactly those.
     """
-    keys = target_keys.select(*key_columns)
-    if broadcast_target:
-        keys = F.broadcast(keys)
-    return source.join(keys, on=key_columns, how="left_anti")
+    return source.join(target_keys.select(*key_columns), on=key_columns, how="left_anti")

@@ -23,47 +23,20 @@ from pyspark.sql import functions as F
 
 
 def counter_merge(
-    df: DataFrame,
-    key_columns: list[str],
-    counter_columns: list[str],
-    exact: bool = True,
-    salt: int | None = None,
+    df: DataFrame, key_columns: list[str], counter_columns: list[str]
 ) -> DataFrame:
     """Pre-aggregate counter deltas per PK (one row per key -> one merge).
 
-    ``exact=True`` sums in DECIMAL so the merge is associative bit-for-bit
-    regardless of partitioning — floating-point sums are order-dependent,
-    and a migration that produces different counters per run is not a
-    migration.  Integer/long counters are exact either way.
-
-    ``salt=N`` splits each key's rows over N sub-keys before the final
-    merge (two shuffles instead of one, both small) — for counter
-    workloads where a handful of hot keys hold most of the rows, the
-    classic skewed-aggregate shape.  Spark's map-side partial aggregation
-    already absorbs MODERATE skew (each task pre-sums its rows before the
-    shuffle); salting is for when even the partially-aggregated hot-key
-    state overwhelms one reducer — e.g. high-cardinality-payload
-    aggregates or extreme row counts per key.  Decimal/long sums are
-    associative, so the result is identical either way (tested).
+    Floating-point counters sum in DECIMAL so the merge is associative
+    bit-for-bit regardless of partitioning — floating-point sums are
+    order-dependent, and a migration that produces different counters per
+    run is not a migration.  Integer/long counters are exact either way.
     """
     aggs = []
     for c in counter_columns:
         col = F.col(c)
-        dt = dict(df.dtypes).get(c, "")
-        if exact and dt in ("double", "float"):
+        if dict(df.dtypes).get(c, "") in ("double", "float"):
             col = col.cast("decimal(28,10)")
         aggs.append(F.sum(col).alias(c))
     aggs.append(F.count(F.lit(1)).alias("merged_row_count"))
-
-    if not salt or salt <= 1:
-        return df.groupBy(*key_columns).agg(*aggs)
-
-    # Salt from the input partition, not a content hash: a hot key whose
-    # rows are IDENTICAL (constant delta — the canonical counter workload)
-    # would all hash to one sub-key and defeat the spread.  Partition ids
-    # are stable under task retry for the same input splits.
-    salted = df.withColumn("__salt", F.pmod(F.spark_partition_id(), F.lit(salt)))
-    partial = salted.groupBy(*key_columns, "__salt").agg(*aggs)
-    final_aggs = [F.sum(F.col(c)).alias(c) for c in counter_columns]
-    final_aggs.append(F.sum("merged_row_count").alias("merged_row_count"))
-    return partial.groupBy(*key_columns).agg(*final_aggs)
+    return df.groupBy(*key_columns).agg(*aggs)

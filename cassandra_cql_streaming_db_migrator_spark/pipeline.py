@@ -8,9 +8,14 @@ into one declarative DataFrame lineage per table:
 
     read -> where_clause filter -> [observe rows_read]
          -> filter chain -> computed columns -> TTL arithmetic
-         -> anti-join (if-not-exists) / counter merge -> column mapping
+         -> anti-join (if-not-exists) -> column mapping
          -> [observe rows_failed] -> validity split (continueOnRowError
             quarantine) -> read/write limit -> [observe rows_passed] -> sink
+
+The sink (``sinks.write_table`` for parquet targets) picks the write by the
+table's mode; a counter table's rows reach it unaggregated, and the counter
+sink sums them per key once.  A streamed migration runs this same plan on
+each microbatch (``streaming.migrate``).
 
 Catalyst's analyze/optimize replaces ``initialize()``; Tungsten execution
 replaces the row loop; input-split partitioning replaces paging; task
@@ -48,7 +53,6 @@ from pyspark.sql import functions as F
 
 from .operators.anti_join import if_not_exists_filter
 from .operators.compute import with_computed_columns
-from .operators.counter import counter_merge
 from .operators.filters import apply_filter_chain, pushdown_filter
 from .operators.limits import read_limit
 from .operators.ttl import ttl_preserving_columns
@@ -148,13 +152,8 @@ def _build(
     if spec.respect_ttl and spec.source_default_ttl and spec.target_default_ttl:
         df = ttl_preserving_columns(df, spec.source_default_ttl, spec.target_default_ttl)  # S3/K4
 
-    if spec.insert_only_if_not_exist:
-        if target_df is None:
-            raise ValueError(f"table {spec.table_name}: if-not-exists needs target data")
+    if spec.insert_only_if_not_exist and target_df is not None:
         df = if_not_exists_filter(df, target_df, spec.key_columns)  # J1/K2
-
-    if spec.counter_columns:
-        df = counter_merge(df, spec.key_columns, spec.counter_columns)  # K3/A1
 
     if target_df is not None and not spec.counter_columns:
         result = validate_migration_schema(
@@ -190,10 +189,11 @@ def _build(
     )
 
 
-def _run_one(plan: TablePlan, sink) -> TableRunResult:
+def run_table(plan: TablePlan, sink) -> TableRunResult:
     """Run one planned table: one Spark action (the sink's write, or the
     dry run's count) that also fills every observation.  Fail-fast tables
-    with a validity split run one count of the invalid rows before it."""
+    with a validity split run one count of the invalid rows before it.
+    ``sink`` is as for ``run_pipeline``."""
     spec = plan.spec
     simulated = spec.simulate_only or sink is None
 
@@ -203,8 +203,8 @@ def _run_one(plan: TablePlan, sink) -> TableRunResult:
         if rows_failed:
             # T5 fail-fast: abort this table before writing anything
             raise RuntimeError(
-                f"table {spec.table_name}: {rows_failed} rows fail validity "
-                "and continue_on_row_error=false"
+                f"table {spec.table_name} fails validity: {rows_failed} rows "
+                "fail validity and continue_on_row_error=false"
             )
 
     def _obs_rows(obs: Observation, fallback_df: DataFrame | None, default: int) -> int:
@@ -238,6 +238,11 @@ def _run_one(plan: TablePlan, sink) -> TableRunResult:
         rows_failed=rows_failed,
         warnings=plan.warnings,
     )
+
+
+# run_pipeline calls run_table by this name, the one perfbench/run.py's
+# tracer wraps to time each table
+_run_one = run_table
 
 
 def run_pipeline(

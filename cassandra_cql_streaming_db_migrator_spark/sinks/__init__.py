@@ -1,15 +1,15 @@
 from .sinks import (
-    MigrationStats,
     noop_sink,
     quarantine_split,
     upsert_parquet,
     write_parquet,
+    write_table,
 )
 
 __all__ = [
-    "MigrationStats",
     "noop_sink",
     "quarantine_split",
     "upsert_parquet",
     "write_parquet",
+    "write_table",
 ]

@@ -22,11 +22,10 @@ from __future__ import annotations
 import os
 import uuid
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.spec import TableMigration
 from ..sources.parquet import local_path, read_parquet
 
 
@@ -92,19 +91,6 @@ def _read_target_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-@dataclass
-class MigrationStats:
-    """The reference's conservation counters (MigrateTableTask.java:89-92,
-    DbMigrator.java:91-106): rows_read = rows_passed_filter + rows_filtered;
-    rows_migrated counts applied writes only (DMP:399-400)."""
-
-    rows_read: int = 0
-    rows_passed_filter: int = 0
-    rows_filtered: int = 0
-    rows_migrated: int = 0
-    rows_failed: int = 0
-
-
 def noop_sink(df: DataFrame) -> int:
     """K5 dry run: execute the full plan (every value materialized, like the
     reference binding each row into the prepared statement) without writing.
@@ -114,6 +100,24 @@ def noop_sink(df: DataFrame) -> int:
 
 def write_parquet(df: DataFrame, path: str, mode: str = "append") -> None:
     df.write.mode(mode).parquet(path)
+
+
+def write_table(
+    df: DataFrame, spec: TableMigration, path: str, epoch_id: int | None = None
+) -> None:
+    """Write one table's planned rows to its parquet target by the table's
+    sink mode: counter tables merge additively (fenced by ``epoch_id``
+    when a microbatch passes it), insert-if-not-exists tables append (the
+    plan has already dropped the keys the target holds), and every other
+    table upserts by key (the whole row when the spec names no key)."""
+    if spec.counter_columns:
+        counter_merge_parquet(
+            df, path, spec.key_columns, spec.counter_columns, epoch_id=epoch_id
+        )
+    elif spec.insert_only_if_not_exist:
+        write_parquet(df, path)
+    else:
+        upsert_parquet(df, path, spec.key_columns or df.columns)
 
 
 def _write_then_swap(merged: DataFrame, target_path: str) -> None:

@@ -89,3 +89,64 @@ def test_module_path_plugin_resolution():
         resolve("no_such_module_xyz:fn")
     with pytest.raises(ValueError, match="unknown filter plugin"):
         resolve("never_registered")
+
+
+COUNTER_YAML = """
+tables:
+  - tableName: events
+    targetTableName: event_counters
+    keyColumns: [user_id, event_type]
+    continueOnRowError: true
+    simulateOnly: false
+    counterColumns: [n_events]
+    calculatedColumns:
+      n_events: "1"
+"""
+
+
+def _run_cli(spark, sf_dir, tmp_path, yaml_text, out_dir):
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(yaml_text)
+    return main(
+        ["-configYaml", str(cfg), "--tables-dir", sf_dir, "--execute",
+         "--output-dir", str(out_dir)],
+        spark=spark,
+    )
+
+
+def test_cli_counter_runs_add_up(spark, sf_dir, tmp_path, capsys):
+    """Each executed run adds its counts to the stored counters; the target
+    holds only keys and counters; with no filter every row read passes."""
+    out_dir = tmp_path / "out"
+    rows = load_table(spark, sf_dir, "events").count()
+    for run in (1, 2):
+        assert _run_cli(spark, sf_dir, tmp_path, COUNTER_YAML, out_dir) == 0
+        target = spark.read.parquet(str(out_dir / "event_counters.parquet"))
+        assert target.agg(F.sum("n_events")).first()[0] == run * rows
+    assert sorted(target.columns) == ["event_type", "n_events", "user_id"]
+    out = capsys.readouterr().out
+    assert f"rowsRead={rows} rowsPassedFilter={rows} rowsFiltered=0" in out
+
+
+def test_cli_if_not_exists_without_target_then_appends_nothing(
+    spark, sf_dir, tmp_path, capsys
+):
+    """An insert-if-not-exists table whose target does not exist yet is
+    written whole; a second run finds every key held and appends nothing."""
+    yaml_text = """
+tables:
+  - tableName: region
+    targetTableName: region_once
+    keyColumns: [r_regionkey]
+    continueOnRowError: true
+    simulateOnly: false
+    insertOnlyIfNotExist: true
+"""
+    out_dir = tmp_path / "out"
+    path = str(out_dir / "region_once.parquet")
+    assert _run_cli(spark, sf_dir, tmp_path, yaml_text, out_dir) == 0
+    assert spark.read.parquet(path).count() == 5
+    assert "rowsMigrated=5" in capsys.readouterr().out
+    assert _run_cli(spark, sf_dir, tmp_path, yaml_text, out_dir) == 0
+    assert spark.read.parquet(path).count() == 5
+    assert "rowsMigrated=0" in capsys.readouterr().out

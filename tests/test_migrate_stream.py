@@ -272,3 +272,56 @@ def test_stream_if_not_exists_keeps_existing_rows_and_replays_idempotently(
     for f in (last, f".{last}.crc"):
         os.remove(os.path.join(commits, f))
     assert run() == first
+
+
+def test_stream_maps_source_onto_existing_target_columns(spark, tmp_path):
+    """A streamed upsert maps each microbatch onto the existing target's
+    columns, as the batch pipeline does: a source column the target lacks
+    is not written, and the target keeps its schema."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    target = str(tmp_path / "target")
+    os.makedirs(target)
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2], pa.int64()), "v": pa.array(["a", "b"], pa.string())}),
+        os.path.join(target, "part-0.parquet"),
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"k": pa.array([2, 3], pa.int64()), "v": pa.array(["B", "c"], pa.string()),
+                  "extra": pa.array([20, 30], pa.int64())}),
+        str(src / "b0.parquet"),
+    )
+    stream = spark.readStream.schema("k long, v string, extra long").parquet(str(src))
+    spec = TableMigration(
+        table_name="t", key_columns=["k"], simulate_only=False,
+        continue_on_row_error=True,
+    )
+    migrate_stream_to_parquet(stream, spec, target, checkpoint_dir=str(tmp_path / "ck"))
+    back = spark.read.parquet(target)
+    assert back.columns == ["k", "v"]
+    assert {r["k"]: r["v"] for r in back.collect()} == {1: "a", 2: "B", 3: "c"}
+
+
+def test_stream_refuses_row_caps_before_starting(spark, sf_dir, tmp_path):
+    """Row caps bound a whole job; a streamed migration refuses a spec that
+    sets one instead of applying it to each microbatch."""
+    import os
+
+    import pytest
+
+    spec = TableMigration(
+        table_name="events", key_columns=["event_id"], simulate_only=False,
+        continue_on_row_error=True, max_read_row_count=10,
+    )
+    target = str(tmp_path / "capped.parquet")
+    ckpt = str(tmp_path / "ck_capped")
+    stream = read_events_stream(spark, sf_dir)
+    with pytest.raises(ValueError, match="maxReadRowCount"):
+        migrate_stream_to_parquet(stream, spec, target, checkpoint_dir=ckpt)
+    assert not os.path.exists(target) and not os.path.exists(ckpt)
+    assert not [q for q in spark.streams.active if q.name == "migrate_events"]

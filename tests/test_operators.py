@@ -490,21 +490,6 @@ class TestCounterMergeSink:
         assert got == {1: 17, 2: 25}
 
 
-def test_salted_counter_merge_equals_unsalted(spark, sf_dir):
-    """Skewed counter aggregate: the two-phase salted merge must produce
-    exactly the plain merge's rows and types (associative sums)."""
-    from cassandra_cql_streaming_db_migrator_spark.operators.counter import counter_merge
-
-    events = load_table(spark, sf_dir, "events")
-    skewed = events.withColumn(
-        "user_id", F.when(F.col("value") < 400, F.lit(3)).otherwise(F.col("user_id"))
-    )
-    plain = counter_merge(skewed, ["user_id"], ["value"])
-    salted = counter_merge(skewed, ["user_id"], ["value"], salt=8)
-    assert dict(plain.dtypes) == dict(salted.dtypes)
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
 def test_minhash_join_matches_self_join_restriction(spark, sf_dir):
     """Cross-corpus minhash join vs the proven self-join pipeline: on a
     split corpus, (new, old) results must equal fuzzy_dedup_pairs' pairs

@@ -23,7 +23,7 @@ from cassandra_cql_streaming_db_migrator_spark.plans.spec import (
 from cassandra_cql_streaming_db_migrator_spark.sinks.sinks import (
     counter_merge_parquet,
     upsert_parquet,
-    write_parquet,
+    write_table,
 )
 from cassandra_cql_streaming_db_migrator_spark.sources.parquet import (
     NANOS_AS_LONG,
@@ -225,13 +225,7 @@ def test_conservation_with_null_key_across_sink_modes(spark, tmp_path):
     )
 
     def sink(df, t):
-        path = targets[t.table_name]
-        if t.counter_columns:
-            counter_merge_parquet(df, path, t.key_columns, t.counter_columns)
-        elif t.insert_only_if_not_exist:
-            write_parquet(df, path, mode="append")
-        else:
-            upsert_parquet(df, path, t.key_columns)
+        write_table(df, t, targets[t.table_name])
 
     sources = {n: spark.read.parquet(str(tmp_path / f"{n}.parquet")) for n in targets}
     tgt = {n: spark.read.parquet(p) for n, p in targets.items()}
