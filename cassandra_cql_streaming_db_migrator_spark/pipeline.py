@@ -189,7 +189,7 @@ def _build(
     )
 
 
-def run_table(plan: TablePlan, sink) -> TableRunResult:
+def _run_one(plan: TablePlan, sink) -> TableRunResult:
     """Run one planned table: one Spark action (the sink's write, or the
     dry run's count) that also fills every observation.  Fail-fast tables
     with a validity split run one count of the invalid rows before it.
@@ -238,11 +238,6 @@ def run_table(plan: TablePlan, sink) -> TableRunResult:
         rows_failed=rows_failed,
         warnings=plan.warnings,
     )
-
-
-# run_pipeline calls run_table by this name, the one perfbench/run.py's
-# tracer wraps to time each table
-_run_one = run_table
 
 
 def run_pipeline(

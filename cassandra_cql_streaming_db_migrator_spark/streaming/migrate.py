@@ -2,19 +2,21 @@
 
 Each microbatch runs the batch pipeline: ``foreachBatch`` reads the target
 as it stands, builds the table's plan over the microbatch
-(``pipeline.build_observed_plan``) and runs it with ``pipeline.run_table``
-into ``sinks.write_table``, exactly as a batch job does.  The microbatch is
-the reference's page/process-batch unit; ``maxFilesPerTrigger`` and trigger
-intervals stand for pageSize + pauseMillisBetweenPages (backpressure).
+(``pipeline.build_observed_plan``) and runs it with the pipeline's
+single-table runner into ``sinks.write_table``, exactly as a batch job
+does.  The microbatch is the reference's page/process-batch unit;
+``maxFilesPerTrigger`` and trigger intervals stand for pageSize +
+pauseMillisBetweenPages (backpressure).
 
 Checkpointing makes a crashed migration restartable from the last
 committed microbatch (the reference restarts from zero or overwrites).
 Delivery is effectively-once for the UPSERT path (replayed batches re-merge
 the same rows), for the IF-NOT-EXISTS path (a replayed batch finds its own
-rows and appends nothing) and epoch-fenced for the COUNTER path
-(sinks.counter_merge_parquet skips applied epochs; only a crash between
-its data swap and marker write still replays once).  Row caps bound a
-whole job, not a microbatch, so a spec that sets one is refused.
+rows and appends nothing) and epoch-fenced for the COUNTER path (a
+microbatch at or below the counter sink's epoch marker is skipped before
+it is planned; only a crash between the sink's data swap and marker write
+still replays once).  Row caps bound a whole job, not a microbatch, so a
+spec that sets one is refused.
 """
 
 from __future__ import annotations
@@ -24,9 +26,9 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from ..pipeline import build_observed_plan, run_table
+from ..pipeline import _run_one, build_observed_plan
 from ..plans.spec import TableMigration
-from ..sinks.sinks import _read_target_if_exists, write_table
+from ..sinks.sinks import _read_target_if_exists, last_applied_epoch, write_table
 
 
 def migrate_stream_to_parquet(
@@ -49,9 +51,12 @@ def migrate_stream_to_parquet(
     checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="migrate_ckpt_")
 
     def sink_batch(batch: DataFrame, epoch_id: int) -> None:
+        last = last_applied_epoch(target_path) if spec.counter_columns else None
+        if last is not None and epoch_id <= last:
+            return  # replayed microbatch: the counter sink already merged it
         target = _read_target_if_exists(batch.sparkSession, target_path)
         plan = build_observed_plan(spec, batch, target)
-        run_table(plan, lambda df, t: write_table(df, t, target_path, epoch_id))
+        _run_one(plan, lambda df, t: write_table(df, t, target_path, epoch_id))
 
     writer = (
         stream.writeStream.foreachBatch(sink_batch)
